@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pypiper_spark.fingerprint import table_bytes
 from pypiper_spark.session import apply_runtime_confs
 
 TABLES: tuple[str, ...] = (
@@ -128,8 +129,6 @@ def fits_broadcast(
     from runtime stats, made explicit so a hinted query degrades to
     the planner's choice instead of an executor OOM when the hinted
     side outgrows the threshold (the r5 q_market_share lesson)."""
-    import os
-
     raw = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     s = raw.strip().lower().rstrip("b")
     mult = 1
@@ -140,14 +139,4 @@ def fits_broadcast(
     threshold = int(s) * mult
     if threshold <= 0:  # broadcast disabled outright
         return False
-    path = os.path.join(sf_dir, f"{tbl}.parquet")
-    size = (
-        sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(path)
-            for f in fs
-        )
-        if os.path.isdir(path)
-        else os.path.getsize(path)
-    )
-    return size * expansion <= threshold
+    return table_bytes(sf_dir, tbl) * expansion <= threshold

@@ -68,7 +68,7 @@ def _truth_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFram
     (fingerprint.corpus_key discipline).
 
     DRIVER-BOUNDED build (VERDICT r11 #1): the pair frame is written
-    by EXECUTORS via ``_atomic_write_df`` (the build_hnsw_graph v4
+    by EXECUTORS via ``fingerprint.atomic_write_df`` (the build_hnsw_graph v4
     publish pattern) — nothing corpus- or pair-count-scaled crosses
     the driver. The r11 form collected every truth pair into Python
     lists before a pyarrow write; bounded at this corpus (~1M pairs)
@@ -76,17 +76,20 @@ def _truth_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFram
     tests/test_approx_ops.py::test_artifact_builders_are_driver_bounded."""
     import os
 
-    from pypiper_spark.fingerprint import corpus_key
-    from pypiper_spark.queries.vectors import _atomic_write_df, _index_dir
+    from pypiper_spark.fingerprint import artifact, atomic_write_df, index_path
 
-    key = corpus_key(sf_dir, f"jaccard_truth_{threshold}")
-    path = os.path.join(_index_dir(), f"jt_{key}.parquet")
-    if not os.path.exists(path):
-        _atomic_write_df(
-            _jaccard_pairs(spark, sf_dir, threshold).select("id_a", "id_b"),
-            path,
-        )
-    return spark.read.parquet(path)
+    def make(key: str) -> str:
+        path = index_path(key)
+        if not os.path.exists(path):
+            atomic_write_df(
+                _jaccard_pairs(spark, sf_dir, threshold).select("id_a", "id_b"),
+                path,
+            )
+        return path
+
+    return spark.read.parquet(
+        artifact("jt", sf_dir, f"jaccard_truth_{threshold}", make)
+    )
 
 
 def _minhash_signatures(tok: DataFrame) -> DataFrame:

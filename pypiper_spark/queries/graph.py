@@ -33,7 +33,8 @@ node-cardinality rows only, never edges.
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pypiper_spark.catalog import load_table
+from pypiper_spark.catalog import fits_broadcast, load_table
+from pypiper_spark.fingerprint import persist_if_small
 from pypiper_spark.registry import register
 
 _N_ITER = 5
@@ -119,11 +120,20 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recomputing over page-cached scans, the measured r9/r6 result),
     # so the 100x behavior — where the sublinear adjudication and
     # SCALE_CLAIMED_SEC pin were taken — is unchanged.
-    if _source_bytes(sf_dir, "lineitem") < 256 * 1024 * 1024:
-        ed = ed.persist()  # lifetime: session.release_query_caches
+    # lifetime: session.release_query_caches
+    ed = persist_if_small(ed, sf_dir, "lineitem")
+    # A cached ed is sized by its compressed column batches, which can
+    # fall under the broadcast threshold while its hash table is many
+    # times bigger; AQE then broadcasts the E-cardinality edge side in
+    # every round (driver OOM at sf0.1 in a 1 GB plain session with 4-8
+    # shuffle partitions). Where lineitem itself would not fit a
+    # broadcast, build on the node-cardinality rank side instead; below
+    # that, broadcasting the edges is the faster plan.
+    big_edges = ed.is_cached and not fits_broadcast(spark, sf_dir, "lineitem")
+    build_side = F.broadcast if big_edges else (lambda df: df)
     for it in range(_N_ITER):
         ranks = (
-            ed.join(ranks.withColumnsRenamed({"node": "src"}), "src")
+            ed.join(build_side(ranks.withColumnsRenamed({"node": "src"})), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(
                 (
@@ -274,18 +284,6 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(wedge_cnt)
         .crossJoin(tri_cnt)
     )
-
-
-def _source_bytes(sf_dir: str, table: str) -> int:
-    """On-disk size of a source table — the plan-time signal the
-    size-adaptive cache policies key on (the 100 TB analog is the
-    catalog's table statistics)."""
-    import os
-
-    try:
-        return os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
-    except OSError:
-        return 1 << 62  # unknown size: assume big, never cache
 
 
 _LPA_ROUNDS = 4
@@ -440,8 +438,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # comfortably below executor memory, recompute when it is not.
     # The gate keys on the lineitem source size (deterministic,
     # plan-time) — ~18 MB at sf0.1 vs ~1 GB at 100x.
-    if _source_bytes(sf_dir, "lineitem") < 256 * 1024 * 1024:
-        pairs = pairs.persist()  # lifetime: session.release_query_caches
+    # lifetime: session.release_query_caches
+    pairs = persist_if_small(pairs, sf_dir, "lineitem")
     nodes = (
         pairs.select(F.col("pa").alias("v"))
         .union(pairs.select(F.col("pb").alias("v")))

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pypiper_spark.catalog import load_table
+from pypiper_spark.fingerprint import artifact
 from pypiper_spark.registry import register
 
 # ---------------------------------------------------------------------------
@@ -548,9 +549,6 @@ def scd2_pointintime(spark: SparkSession, sf_dir: str) -> DataFrame:
 # this shape of model: bag-of-words, class-conditional counts).
 # ---------------------------------------------------------------------------
 
-# In-process memo over the persisted NB model artifact.
-_NB_MEMO: dict = {}
-
 
 def _nb_artifacts(spark: SparkSession, sf_dir: str):
     """Train-once Naive Bayes model as a persisted artifact (VERDICT
@@ -564,16 +562,19 @@ def _nb_artifacts(spark: SparkSession, sf_dir: str):
     (fastText/CCNet filters ship trained). All rounding happens
     engine-side before anything leaves Spark, so artifact reuse
     changes no value."""
+    mpath, info = artifact(
+        "nb", sf_dir, "nb_model_v1", lambda key: _nb_model(spark, sf_dir, key)
+    )
+    return spark.read.parquet(mpath), info
+
+
+def _nb_model(spark: SparkSession, sf_dir: str, key: str):
+    """Load, or train and publish, the NB model under the temp dir;
+    returns (model parquet path, per-class scalars)."""
     import json as _json
     import tempfile as _tempfile
 
-    from pypiper_spark.fingerprint import corpus_key
-
-    key = corpus_key(sf_dir, "nb_model_v1")
-    if key in _NB_MEMO:
-        mpath, info = _NB_MEMO[key]
-        return spark.read.parquet(mpath), info
-    base = os.path.join(_tempfile.gettempdir(), f"pypiper_nb_{key}")
+    base = os.path.join(_tempfile.gettempdir(), f"pypiper_{key}")
     mpath = os.path.join(base, "model")
     ipath = os.path.join(base, "info.json")
     if not (
@@ -636,8 +637,7 @@ def _nb_artifacts(spark: SparkSession, sf_dir: str):
         os.replace(tmp, ipath)
     with open(ipath) as fh:
         info = {c: (int(u), int(p)) for c, (u, p) in _json.load(fh).items()}
-    _NB_MEMO[key] = (mpath, info)
-    return spark.read.parquet(mpath), info
+    return mpath, info
 
 
 _NB_ORACLE = """
@@ -781,9 +781,6 @@ def classifier_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DSIR_BUCKETS = 4096
 _DSIR_K = 200
 
-# In-process memo over the persisted artifact (see _dsir_ratio_vec).
-_DSIR_MEMO: dict = {}
-
 
 def _dsir_ratio_vec(spark: SparkSession, sf_dir: str):
     """The 4096-bucket DSIR log-ratio model as a dense int64 vector,
@@ -797,22 +794,24 @@ def _dsir_ratio_vec(spark: SparkSession, sf_dir: str):
     4096-grain groupBy — raw and target counts in the same exchange)
     so the 8-dp rounding semantics stay Spark's, and the collect is
     the bounded 4096-row index artifact."""
+    return artifact(
+        "dsir", sf_dir, "dsir_ratio_v1", lambda key: _dsir_fit(spark, sf_dir, key)
+    )
+
+
+def _dsir_fit(spark: SparkSession, sf_dir: str, key: str):
+    """Load, or fit and publish, the DSIR ratio vector as JSON under
+    the temp dir."""
     import json as _json
     import tempfile as _tempfile
 
     import numpy as np
 
-    from pypiper_spark.fingerprint import corpus_key
-
-    key = corpus_key(sf_dir, "dsir_ratio_v1")
-    if key in _DSIR_MEMO:
-        return _DSIR_MEMO[key]
-    path = os.path.join(_tempfile.gettempdir(), f"pypiper_dsir_{key}.json")
+    path = os.path.join(_tempfile.gettempdir(), f"pypiper_{key}.json")
     if os.path.exists(path):
         with open(path) as fh:
             arr = np.array(_json.load(fh), dtype=np.int64)
         if arr.size == _DSIR_BUCKETS:
-            _DSIR_MEMO[key] = arr
             return arr
 
     d = load_table(spark, sf_dir, "documents")
@@ -851,7 +850,6 @@ def _dsir_ratio_vec(spark: SparkSession, sf_dir: str):
     with os.fdopen(fd, "w") as fh:
         _json.dump([int(x) for x in vec], fh)
     os.replace(tmp, path)
-    _DSIR_MEMO[key] = vec
     return vec
 
 _DSIR_ORACLE = f"""

@@ -10,8 +10,8 @@ cluster):
   Python UDFs are banned from hot paths (SURVEY.md section 4.2).
 - **UTC session timezone**: deterministic timestamp semantics against
   external oracles regardless of host TZ.
-- **nanosAsLong**: Spark cannot read parquet TIMESTAMP(NANOS)
-  (events.ts); with this legacy conf it reads as LongType ns and
+- **nanosAsLong**: Spark cannot read parquet TIMESTAMP(NANOS) (an
+  events.ts stored in ns); with this legacy conf it reads as LongType ns and
   catalog.load_table converts to timestamp_ntz at microsecond
   precision — bit-identical to DuckDB's own ns->us truncation.
 """
@@ -22,15 +22,23 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def _core_count() -> int:
+    """Cores the engine sizes itself to (``local[N]`` and the default
+    shuffle-partition count): ``SPARK_GRAFT_CPUS`` when it is a
+    positive integer, else the cores this process may run on. Read at
+    call time, so a value set after import is honored."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if raw.isdigit() and int(raw) > 0:
+        return int(raw)
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # no affinity API on this platform
+        return os.cpu_count() or 1
+
+
 # Confs that are safe (and required) to apply to any session at runtime,
 # including a driver-provided session we didn't create.
-def _core_count() -> int:
-    try:
-        return max(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), 4)
-    except ValueError:
-        return 32
-
-
 RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
@@ -91,12 +99,12 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) the engine's SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the core count — on a real
-    cluster you would size this to ~2-3x total cores and let AQE
-    coalesce; locally core-count avoids tiny-partition overhead.
+    ``master`` defaults to ``local[N]`` and ``shuffle_partitions`` to
+    N, where N is ``_core_count()`` — on a real cluster you would size
+    partitions to ~2-3x total cores and let AQE coalesce; locally
+    core-count avoids tiny-partition overhead.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _core_count()
     if master is None:
         master = f"local[{cpus}]"
 
@@ -106,20 +114,23 @@ def get_spark(
     # from the JVM's inherited PYTHONPATH only — unlike the regular
     # worker daemon it ignores the per-function env map, so this is the
     # one hook that reaches EVERY python child. sitecustomize there is
-    # a no-op unless google.protobuf is missing (pbcompat.py).
+    # a no-op unless google.protobuf is missing (pbcompat.py). The
+    # package's parent directory goes at the end: workers unpickle
+    # functions that live in pypiper_spark (the stateful counter's
+    # state function), which fails with ModuleNotFoundError when the
+    # process started outside the repo root.
     from pypiper_spark.pbcompat import worker_env_entry
 
+    paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     entry = worker_env_entry()
-    current = os.environ.get("PYTHONPATH", "")
-    if entry not in current.split(os.pathsep):
-        os.environ["PYTHONPATH"] = entry + (
-            os.pathsep + current if current else ""
-        )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if entry not in paths:
+        paths.insert(0, entry)
+    if root not in paths:
+        paths.append(root)
+    os.environ["PYTHONPATH"] = os.pathsep.join(paths)
     if shuffle_partitions is None:
-        try:
-            shuffle_partitions = max(int(cpus), 4)
-        except ValueError:
-            shuffle_partitions = 32
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.master(master)

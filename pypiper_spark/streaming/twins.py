@@ -23,6 +23,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.window import Window
 
+from pypiper_spark.fingerprint import corpus_key, table_bytes
 from pypiper_spark.session import apply_runtime_confs, scoped_confs
 
 # Raw schema of events.parquet, ts field chosen per the file's actual
@@ -115,8 +116,8 @@ def _stream_shuffle_partitions(
     partition, floored at 4, capped at the session default so a
     cluster-sized session is never exceeded) keeps the instance count
     proportional to the state it carries. This is the same
-    size-adaptive policy the batch side already applies (graph.py
-    `_source_bytes` cache gate, fingerprint.table_num_rows geometry):
+    size-adaptive policy the batch side already applies
+    (fingerprint.persist_if_small cache gate, table_num_rows geometry):
     a 100 TB stream sizes up through the same formula — partitions
     grow linearly with input until the session's own parallelism cap
     — while a toy corpus stops paying 32x the state-commit floor.
@@ -128,7 +129,7 @@ def _stream_shuffle_partitions(
     except (TypeError, ValueError):  # non-numeric conf (ADVICE r12)
         session_default = 32
     try:
-        bytes_ = os.path.getsize(os.path.join(sf_dir, f"{table}.parquet"))
+        bytes_ = table_bytes(sf_dir, table)
     except OSError:
         return session_default
     sized = max(
@@ -160,16 +161,14 @@ def _stream_scope(spark: SparkSession, sf_dir: str, table: str = "events"):
 
 
 def _staging_key(sf_dir: str, table: str = "events") -> str:
-    """Staging-dir key carrying the SOURCE fingerprint (size + mtime),
-    so a regenerated corpus can never be served a stale staged replay
-    — and an unchanged corpus reuses its staged files across calls
-    instead of rebuilding them per run."""
+    """Staging-dir key carrying the SOURCE fingerprint
+    (fingerprint.corpus_key), so a regenerated corpus can never be
+    served a stale staged replay — and an unchanged corpus reuses its
+    staged files across calls instead of rebuilding them per run."""
     try:
-        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-        fp = f"{st.st_size}:{st.st_mtime_ns}"
+        return corpus_key(sf_dir, f"staging_{table}", (table,))
     except OSError:
-        fp = "nofp"
-    return hashlib.md5(f"{sf_dir}|{table}|{fp}".encode()).hexdigest()[:8]
+        return corpus_key(sf_dir, f"staging_{table}:nofp", ())
 
 
 def _stage_slices(df: DataFrame, stage: str, n: int, pred, project=None) -> None:

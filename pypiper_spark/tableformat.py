@@ -9,7 +9,7 @@ Layout (one directory per table)::
       snapshots/snap-<N>.json            manifest: data-file list + meta
       CURRENT                            text pointer to the live snapshot
 
-Commit protocol (the os.replace discipline from vectors._atomic_write_table,
+Commit protocol (the os.replace discipline from fingerprint.atomic_write_table,
 applied to a pointer file):
 
 1. write new data files under ``data/`` (unique names — never reused,

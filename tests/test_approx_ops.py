@@ -7,6 +7,7 @@ import hashlib
 import pandas as pd
 import pytest
 
+from pypiper_spark import fingerprint as FP
 from pypiper_spark.registry import all_queries
 
 QS = all_queries()
@@ -454,7 +455,7 @@ def test_semantic_dedup_matches_numpy_recompute(spark, sf_dir):
 
 def test_ann_index_artifacts_survive_cold_start(spark, sf_dir, monkeypatch):
     """IVF centroids and PQ codebooks are persisted parquet artifacts:
-    a cold process (simulated by clearing the in-process memo dicts)
+    a cold process (simulated by clearing the in-process memo)
     must answer index builds WITHOUT re-fitting — we poison the fit
     path (load_table) and assert the loaded artifacts are bit-identical
     to the warm builds."""
@@ -462,8 +463,7 @@ def test_ann_index_artifacts_survive_cold_start(spark, sf_dir, monkeypatch):
 
     warm_ivf = V.build_ivf_index(spark, sf_dir, k=16)
     warm_pq = V.build_pq_codebooks(spark, sf_dir)
-    V._IVF_CACHE.clear()
-    V._PQ_CACHE.clear()
+    FP._MEMO.clear()
 
     def _boom(*a, **k):
         raise AssertionError("cold start re-ran the index fit path")
@@ -483,7 +483,7 @@ def test_ivfpq_artifact_survives_cold_start(spark, sf_dir, monkeypatch):
 
     cents = V.build_ivf_index(spark, sf_dir, k=16)
     warm = V.build_ivfpq_codebooks(spark, sf_dir, cents)
-    V._IVFPQ_CACHE.clear()
+    FP._MEMO.clear()
 
     def _boom(*a, **k):
         raise AssertionError("cold start re-ran the residual-PQ fit path")
@@ -519,10 +519,12 @@ def test_ivfpq_recall_against_bruteforce_and_beats_cell_floor(spark, sf_dir):
 
 def test_ann_index_artifact_invalidated_by_params(spark, sf_dir):
     """Different params -> different artifact file (no collisions)."""
-    from pypiper_spark.queries.vectors import _artifact_path
-
-    a = _artifact_path("ivf", sf_dir, "k=16:frac=0.25:seed=42")
-    b = _artifact_path("ivf", sf_dir, "k=32:frac=0.25:seed=42")
+    a = FP.index_path(
+        FP.artifact_key("ivf", sf_dir, "k=16:frac=0.25:seed=42", ("embeddings",))
+    )
+    b = FP.index_path(
+        FP.artifact_key("ivf", sf_dir, "k=32:frac=0.25:seed=42", ("embeddings",))
+    )
     assert a != b
 
 
@@ -629,7 +631,7 @@ def test_hnsw_artifact_survives_cold_start(spark, sf_dir, monkeypatch):
     from pypiper_spark.queries import vectors as V
 
     warm = V.build_hnsw_graph(spark, sf_dir)
-    V._HNSW_CACHE.clear()
+    FP._MEMO.clear()
 
     def _boom(*a, **k):
         raise AssertionError("cold start re-ran the graph build")
@@ -679,7 +681,7 @@ def test_hnsw_build_is_driver_bounded(spark, sf_dir, tmp_path, monkeypatch):
     from pypiper_spark.queries import vectors as V
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    V._HNSW_CACHE.clear()
+    FP._MEMO.clear()
     collect_sizes = []
     orig_collect = DataFrame.collect
 
@@ -696,7 +698,7 @@ def test_hnsw_build_is_driver_bounded(spark, sf_dir, tmp_path, monkeypatch):
     try:
         epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, sf_dir)
     finally:
-        V._HNSW_CACHE.clear()  # paths point into tmp_path — don't leak
+        FP._MEMO.clear()  # paths point into tmp_path — don't leak
     assert n_nodes > 0
     # hash-sample fluctuation can exceed the cap slightly; 2x is far
     # below any corpus-sized pull at a scale where the pin matters
@@ -713,7 +715,7 @@ def test_artifact_builders_are_driver_bounded(spark, sf_dir, tmp_path, monkeypat
     (collect / toArrow; toPandas banned outright) during a COLD build
     must be bounded (sample-, probe-, or cap-sized). _truth_pairs in
     particular must do ZERO driver materialization: its pair frame is
-    executor-written via _atomic_write_df (the r11 form collected every
+    executor-written via atomic_write_df (the r11 form collected every
     >=threshold truth pair through the driver — bounded at this corpus
     but data-scaled on a near-dup-heavy crawl)."""
     from pyspark.sql import DataFrame
@@ -722,9 +724,7 @@ def test_artifact_builders_are_driver_bounded(spark, sf_dir, tmp_path, monkeypat
     from pypiper_spark.queries import vectors as V
 
     monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(tmp_path))
-    caches = (V._IVF_CACHE, V._PQ_CACHE, V._IVFPQ_CACHE, V._HNSW_CACHE)
-    for c in caches:
-        c.clear()
+    FP._MEMO.clear()
     sizes = []
     orig_collect, orig_toarrow = DataFrame.collect, DataFrame.toArrow
 
@@ -754,8 +754,7 @@ def test_artifact_builders_are_driver_bounded(spark, sf_dir, tmp_path, monkeypat
         V.build_ivfpq_codebooks(spark, sf_dir, centroids)
         V.build_hnsw_graph(spark, sf_dir)
     finally:
-        for c in caches:
-            c.clear()  # cached paths point into tmp_path — don't leak
+        FP._MEMO.clear()  # cached paths point into tmp_path — don't leak
     cap = 2 * V._HNSW_SAMPLE_CAP
     assert all(s <= cap for s in sizes), sizes
 
@@ -780,11 +779,11 @@ def test_hnsw_build_degenerate_single_vector_corpus(
     monkeypatch.setenv(
         "SPARK_GRAFT_INDEX_DIR", str(tmp_path_factory.mktemp("degenerate_idx"))
     )
-    V._HNSW_CACHE.clear()
+    FP._MEMO.clear()
     try:
         epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, str(base))
     finally:
-        V._HNSW_CACHE.clear()
+        FP._MEMO.clear()
     edges = pq_.read_table(epath)
     assert edges.num_rows == 0
     assert {f.name for f in edges.schema} == {"src", "dst", "dst_emb"}

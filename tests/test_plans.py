@@ -1268,3 +1268,33 @@ def test_time_travel_scans_each_diff_part_once(spark, sf_dir):
     scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
     assert len(scans) == 3, plan[:3000]
     assert "Join" not in plan, plan[:3000]
+
+
+def test_pagerank_never_broadcasts_the_cached_edge_side(spark, sf_dir):
+    """The cached (src, dst, outdeg) edge frame is sized by its compressed
+    batches, so AQE can judge it small enough to broadcast. Where
+    lineitem itself does not fit the broadcast threshold, the round join
+    must build on the node-cardinality rank side, or every round
+    broadcasts all edges (driver OOM at sf0.1 in a 1 GB session).
+    Checked on the final adaptive plan, under a threshold just below
+    lineitem's expanded size."""
+    from pypiper_spark.fingerprint import table_bytes
+    from pypiper_spark.session import release_query_caches, scoped_confs
+
+    threshold = 4 * table_bytes(sf_dir, "lineitem") - 1
+    with scoped_confs(spark, {"spark.sql.autoBroadcastJoinThreshold": str(threshold)}):
+        df = QS["q_graph_pagerank"].fn(spark, sf_dir)
+        try:
+            df.collect()
+            lines = _df_plan(df).splitlines()
+        finally:
+            release_query_caches(spark)
+    passthrough = ("Filter", "TableCacheQueryStage", "ColumnarToRow", "InputAdapter", "Project")
+    for i, line in enumerate(lines):
+        if "BroadcastExchange" not in line:
+            continue
+        child = next(
+            below for below in lines[i + 1 :] if not any(k in below for k in passthrough)
+        )
+        edge_side = "InMemoryTableScan" in child and "outdeg" in child
+        assert not edge_side, "\n".join(lines[i : i + 6])

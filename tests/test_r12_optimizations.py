@@ -1,8 +1,7 @@
 """Focused pins for the r12 optimization round's internal changes.
 
-Covers the three internals the round restructured:
-- twins._stream_shuffle_partitions (size-adaptive streaming state
-  partitions — the formula, its floor, and its session cap);
+Covers the internals the round restructured (the
+twins._stream_shuffle_partitions pins live in test_streaming.py):
 - twins._stage_slices (fingerprint-keyed executor-written staging —
   reuse on second call, rebuild on incomplete dir);
 - dedup._star_components (fixpoint fused into the round rollup —
@@ -24,42 +23,6 @@ from pypiper_spark.session import get_spark
 @pytest.fixture(scope="module")
 def spark():
     return get_spark(app_name="r12-opt-tests", shuffle_partitions=8)
-
-
-def test_stream_partitions_floor_for_tiny_input(spark, tmp_path):
-    from pypiper_spark.streaming.twins import (
-        _STREAM_PARTITION_FLOOR,
-        _stream_shuffle_partitions,
-    )
-
-    (tmp_path / "events.parquet").write_bytes(b"x" * 1024)  # 1 KB
-    assert _stream_shuffle_partitions(spark, str(tmp_path)) == (
-        _STREAM_PARTITION_FLOOR
-    )
-
-
-def test_stream_partitions_scale_with_input_capped_at_session(spark, tmp_path):
-    from pypiper_spark.streaming.twins import (
-        _STREAM_PARTITION_TARGET_BYTES,
-        _stream_shuffle_partitions,
-    )
-
-    # 5 targets worth of bytes -> 5 partitions (below the session cap of 8)
-    with open(tmp_path / "events.parquet", "wb") as fh:
-        fh.seek(5 * _STREAM_PARTITION_TARGET_BYTES - 1)
-        fh.write(b"\0")
-    assert _stream_shuffle_partitions(spark, str(tmp_path)) == 5
-    # 100 targets worth -> capped at the session default (8 here)
-    with open(tmp_path / "events.parquet", "wb") as fh:
-        fh.seek(100 * _STREAM_PARTITION_TARGET_BYTES - 1)
-        fh.write(b"\0")
-    assert _stream_shuffle_partitions(spark, str(tmp_path)) == 8
-
-
-def test_stream_partitions_missing_table_falls_back_to_session(spark, tmp_path):
-    from pypiper_spark.streaming.twins import _stream_shuffle_partitions
-
-    assert _stream_shuffle_partitions(spark, str(tmp_path / "nope")) == 8
 
 
 def test_stage_slices_reuses_complete_dir_and_rebuilds_incomplete(spark, tmp_path):

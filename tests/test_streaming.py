@@ -194,3 +194,77 @@ def test_late_accounting_twin(spark, sf_dir):
     assert not diffs, f"on-time counts drifted: {dict(list(diffs.items())[:5])}"
     # the replay must actually exercise lateness at this sf
     assert sum(r["n_late"] for r in rows) > 0
+
+
+# --- stream shuffle-partition sizing (twins._stream_shuffle_partitions):
+# the formula, its floor, its session cap and per-table sizing.
+
+
+def test_stream_partitions_floor_for_tiny_input(spark, tmp_path):
+    from pypiper_spark.streaming.twins import (
+        _STREAM_PARTITION_FLOOR,
+        _stream_shuffle_partitions,
+    )
+
+    (tmp_path / "events.parquet").write_bytes(b"x" * 1024)  # 1 KB
+    assert _stream_shuffle_partitions(spark, str(tmp_path)) == (
+        _STREAM_PARTITION_FLOOR
+    )
+
+
+def test_stream_partitions_scale_with_input_capped_at_session(spark, tmp_path):
+    from pypiper_spark.streaming.twins import (
+        _STREAM_PARTITION_TARGET_BYTES,
+        _stream_shuffle_partitions,
+    )
+
+    # 5 targets worth of bytes -> 5 partitions (below the session cap of 8)
+    with open(tmp_path / "events.parquet", "wb") as fh:
+        fh.seek(5 * _STREAM_PARTITION_TARGET_BYTES - 1)
+        fh.write(b"\0")
+    assert _stream_shuffle_partitions(spark, str(tmp_path)) == 5
+    # 100 targets worth -> capped at the session default (8 here)
+    with open(tmp_path / "events.parquet", "wb") as fh:
+        fh.seek(100 * _STREAM_PARTITION_TARGET_BYTES - 1)
+        fh.write(b"\0")
+    assert _stream_shuffle_partitions(spark, str(tmp_path)) == 8
+
+
+def test_stream_partitions_missing_table_falls_back_to_session(spark, tmp_path):
+    from pypiper_spark.streaming.twins import _stream_shuffle_partitions
+
+    assert _stream_shuffle_partitions(spark, str(tmp_path / "nope")) == 8
+
+
+def test_stream_partitions_never_exceed_small_session(spark, tmp_path):
+    """ADVICE r12: session default BELOW the floor must win (the old
+    formula returned the floor, exceeding the session's own cap)."""
+    from pypiper_spark.streaming.twins import _stream_shuffle_partitions
+
+    (tmp_path / "events.parquet").write_bytes(b"x" * 1024)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "2")
+        assert _stream_shuffle_partitions(spark, str(tmp_path)) == 2
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    # (the non-numeric-conf fallback in the formula is unreachable via
+    # spark.conf — Spark validates the value at set() time — and stays
+    # as defense only)
+
+
+def test_stream_partitions_size_from_named_table(spark, tmp_path):
+    """ADVICE r12: streams staged from other tables (orders for CDC
+    upsert, documents for corpus build) must size from THAT file."""
+    from pypiper_spark.streaming.twins import (
+        _STREAM_PARTITION_TARGET_BYTES,
+        _stream_shuffle_partitions,
+    )
+
+    with open(tmp_path / "orders.parquet", "wb") as fh:
+        fh.seek(6 * _STREAM_PARTITION_TARGET_BYTES - 1)
+        fh.write(b"\0")
+    # events.parquet absent: the events-keyed call falls back to the
+    # session default, the orders-keyed call sizes from orders
+    assert _stream_shuffle_partitions(spark, str(tmp_path)) == 8
+    assert _stream_shuffle_partitions(spark, str(tmp_path), table="orders") == 6

@@ -680,6 +680,7 @@ def test_multiprocess_commit_contention(spark, small_df, tmp_path):
     test above can only simulate."""
     import subprocess
     import sys as _sys
+    import time
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -701,12 +702,18 @@ def test_multiprocess_commit_contention(spark, small_df, tmp_path):
                 mine.append(rel)
             all_files.append(mine)
 
+        os.mkdir(root + ".gate")
         worker = f"""
-import json, sys
+import json, os, sys, time
 sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(tf.__file__)))!r})
 from pypiper_spark import tableformat as tf
 
 root, files = sys.argv[1], sys.argv[2:]
+# start gate: commit only once every writer has imported, so the
+# writers race instead of running one after another
+open(os.path.join(root + ".gate", f"ready-{{os.getpid()}}"), "w").close()
+while not os.path.exists(os.path.join(root + ".gate", "go")):
+    time.sleep(0.001)
 conflicts = 0
 for fp in files:
     while True:
@@ -739,6 +746,10 @@ print(json.dumps({{"conflicts": conflicts}}))
             )
             for p in range(n_procs)
         ]
+        deadline = time.monotonic() + 120
+        while len(os.listdir(root + ".gate")) < n_procs and time.monotonic() < deadline:
+            time.sleep(0.01)
+        open(os.path.join(root + ".gate", "go"), "w").close()
         total_conflicts = 0
         for p in procs:
             out, err = p.communicate(timeout=120)
