@@ -118,8 +118,11 @@ def persist_if_small(df, sf_dir: str, table: str):
     return df.persist() if small else df
 
 
-# key -> artifact value (centroids, codebooks, artifact paths, merges)
-_MEMO: dict[str, object] = {}
+# (index root, key) -> artifact value (centroids, codebooks, artifact
+# paths, merges). The root is part of the memo key because a persisted
+# artifact's value may be a path under it: a process that moves
+# SPARK_GRAFT_INDEX_DIR must load or build under the new root.
+_MEMO: dict[tuple[str, str], object] = {}
 
 
 def artifact_key(kind: str, sf_dir: str, params: str, tables: tuple = ("documents",)) -> str:
@@ -131,8 +134,8 @@ def artifact_key(kind: str, sf_dir: str, params: str, tables: tuple = ("document
 def artifact(kind: str, sf_dir: str, params: str, make, tables: tuple = ("documents",)):
     """The per-process memo over one corpus-derived artifact.
 
-    ``make(key)`` runs once per ``artifact_key`` per process. A
-    persisted artifact takes its file name from the key
+    ``make(key)`` runs once per ``artifact_key`` and index root per
+    process. A persisted artifact takes its file name from the key
     (``index_path(key)``), so ``make`` loads it when it already exists
     and otherwise builds and publishes it. Rewriting a source table in
     place changes the key, so a long-lived process never serves an
@@ -140,9 +143,10 @@ def artifact(kind: str, sf_dir: str, params: str, make, tables: tuple = ("docume
     ``make``: builds are deterministic and published atomically, so the
     second one is redundant, not wrong."""
     key = artifact_key(kind, sf_dir, params, tables)
-    if key not in _MEMO:
-        _MEMO[key] = make(key)
-    return _MEMO[key]
+    slot = (index_dir(), key)
+    if slot not in _MEMO:
+        _MEMO[slot] = make(key)
+    return _MEMO[slot]
 
 
 def memoized(kind: str, params: str, tables: tuple = ("documents",)):

@@ -355,8 +355,7 @@ def join_multiway(spark: SparkSession, sf_dir: str) -> DataFrame:
     side) that the eager-agg shape never materializes. On a real
     cluster the network flips the exchange cost, so the lever is
     plausible there — but it is not claimable from this harness.
-    Full numbers: BENCH.md r5; harnesses:
-    tools/experiment_multiway_bucketed.py, tools/probe_multiway_cold.py."""
+    Full numbers and method: BENCH.md r5."""
     r = load_table(spark, sf_dir, "region")
     n = load_table(spark, sf_dir, "nation")
     c = load_table(spark, sf_dir, "customer")

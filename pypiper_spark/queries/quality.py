@@ -1058,9 +1058,9 @@ def right_to_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     profiled branch work is 0.04 s warm, and a structurally different
     single-wide-aggregate fusion measured the SAME wall (both
     attempts recorded in BENCH.md r7/r8). The data term scales, the
-    floor does not; the regression guard is the 0.5 s warn ceiling in
-    bench.py (PACK_CEILING_SEC), which trips only if the data term
-    actually grows."""
+    floor does not. A regression in the data term shows up as an
+    interleaved perfbench A/B on one host, not as a fixed ceiling:
+    a pinned number describes the host it was measured on."""
     c = load_table(spark, sf_dir, "customer")
     o = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")

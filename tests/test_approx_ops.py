@@ -6,6 +6,7 @@ import hashlib
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from pypiper_spark import fingerprint as FP
 from pypiper_spark.registry import all_queries
@@ -695,10 +696,7 @@ def test_hnsw_build_is_driver_bounded(spark, sf_dir, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     monkeypatch.setattr(DataFrame, "toPandas", banned_topandas)
-    try:
-        epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, sf_dir)
-    finally:
-        FP._MEMO.clear()  # paths point into tmp_path — don't leak
+    epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, sf_dir)
     assert n_nodes > 0
     # hash-sample fluctuation can exceed the cap slightly; 2x is far
     # below any corpus-sized pull at a scale where the pin matters
@@ -744,17 +742,14 @@ def test_artifact_builders_are_driver_bounded(spark, sf_dir, tmp_path, monkeypat
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
     monkeypatch.setattr(DataFrame, "toArrow", counting_toarrow)
     monkeypatch.setattr(DataFrame, "toPandas", banned_topandas)
-    try:
-        D._truth_pairs(spark, sf_dir, 0.9)
-        D._truth_pairs(spark, sf_dir, 0.95)
-        assert sizes == [], f"_truth_pairs materialized on the driver: {sizes}"
-        V._exact_topk_artifact(spark, sf_dir)
-        centroids = V.build_ivf_index(spark, sf_dir)
-        V.build_pq_codebooks(spark, sf_dir)
-        V.build_ivfpq_codebooks(spark, sf_dir, centroids)
-        V.build_hnsw_graph(spark, sf_dir)
-    finally:
-        FP._MEMO.clear()  # cached paths point into tmp_path — don't leak
+    D._truth_pairs(spark, sf_dir, 0.9)
+    D._truth_pairs(spark, sf_dir, 0.95)
+    assert sizes == [], f"_truth_pairs materialized on the driver: {sizes}"
+    V._exact_topk_artifact(spark, sf_dir)
+    centroids = V.build_ivf_index(spark, sf_dir)
+    V.build_pq_codebooks(spark, sf_dir)
+    V.build_ivfpq_codebooks(spark, sf_dir, centroids)
+    V.build_hnsw_graph(spark, sf_dir)
     cap = 2 * V._HNSW_SAMPLE_CAP
     assert all(s <= cap for s in sizes), sizes
 
@@ -780,10 +775,7 @@ def test_hnsw_build_degenerate_single_vector_corpus(
         "SPARK_GRAFT_INDEX_DIR", str(tmp_path_factory.mktemp("degenerate_idx"))
     )
     FP._MEMO.clear()
-    try:
-        epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, str(base))
-    finally:
-        FP._MEMO.clear()
+    epath, spath, apath, n_nodes = V.build_hnsw_graph(spark, str(base))
     edges = pq_.read_table(epath)
     assert edges.num_rows == 0
     assert {f.name for f in edges.schema} == {"src", "dst", "dst_emb"}
@@ -793,3 +785,24 @@ def test_hnsw_build_degenerate_single_vector_corpus(
     assign = pq_.read_table(apath).to_pandas()
     assert sorted(assign.vec_id) == [1, 2, 3]
     assert set(assign.node_id) == {1}
+
+
+def test_hnsw_seq_dot_matches_spark_fold(spark):
+    """r13 pin: _seq_dot (cumsum fold) must be BIT-identical to the
+    F.aggregate sequential fold the Spark-side cosine uses — the
+    driver beam search's ordering decisions depend on it."""
+    import numpy as np
+
+    from pypiper_spark.functions.vectors import dot as spark_dot
+    from pypiper_spark.queries.vectors import _seq_dot
+
+    rng = np.random.default_rng(13)
+    A = rng.normal(0, 0.1, size=(50, 64))
+    B = rng.normal(0, 0.1, size=(50, 64))
+    rows = [(a.tolist(), b.tolist()) for a, b in zip(A, B)]
+    df = spark.createDataFrame(rows, "a array<double>, b array<double>")
+    got_spark = [
+        r.d for r in df.select(spark_dot(F.col("a"), F.col("b")).alias("d")).collect()
+    ]
+    got_np = _seq_dot(A, B).tolist()
+    assert got_spark == got_np  # exact equality, not approx

@@ -142,14 +142,28 @@ def test_index_artifacts_follow_in_place_rewrite(spark, sf_dir, tmp_path, monkey
         )
 
     FP._MEMO.clear()
-    try:
-        before = build()
-        tbl = pq.read_table(emb)
-        pq.write_table(tbl.slice(tbl.num_rows // 3), emb)
-        after = build()
-        for name, a, b in zip(("ivf", "pq", "ivfpq"), after, before):
-            assert a != b, f"{name} served the pre-rewrite artifact"
-        FP._MEMO.clear()
-        assert build() == after
-    finally:
-        FP._MEMO.clear()  # cached paths point into tmp_path — don't leak
+    before = build()
+    tbl = pq.read_table(emb)
+    pq.write_table(tbl.slice(tbl.num_rows // 3), emb)
+    after = build()
+    for name, a, b in zip(("ivf", "pq", "ivfpq"), after, before):
+        assert a != b, f"{name} served the pre-rewrite artifact"
+    FP._MEMO.clear()
+    assert build() == after
+
+
+def test_artifact_memo_follows_index_root(spark, sf_dir, tmp_path, monkeypatch):
+    """A process that moves SPARK_GRAFT_INDEX_DIR must load or build
+    its artifacts under the new root: the memo must not hand back what
+    it found under the old one."""
+    from pypiper_spark.queries import vectors as V
+
+    params = "k=16:frac=0.25:seed=42"
+    first, second = tmp_path / "first", tmp_path / "second"
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(first))
+    cents = V.build_ivf_index(spark, sf_dir, k=16)
+    monkeypatch.setenv("SPARK_GRAFT_INDEX_DIR", str(second))
+    assert V.build_ivf_index(spark, sf_dir, k=16) == cents
+    path = FP.index_path(FP.artifact_key("ivf", sf_dir, params, ("embeddings",)))
+    assert os.path.dirname(path) == str(second)
+    assert os.path.exists(path), "the memo served the old root's artifact"

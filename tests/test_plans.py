@@ -60,10 +60,10 @@ def test_multiway_join_reads_raw_facts_not_bucketed_twins(spark, sf_dir):
     exchanges, 5 -> 3) measured 1.3-1.6x SLOWER warm than the shipped
     eager-agg shape at the 100x corpus on local[32], plus a 21 s
     ingest (clean fresh-process A/B x3 runs: eager-agg 4.6-5.4 s,
-    bucketed-SMJ 7.1-7.4 s, bucketed-SHJ 6.7-6.8 s — BENCH.md r5,
-    tools/experiment_multiway_bucketed.py). This guard asserts the
-    query kept the winning shape: raw parquet fact scans (no bucketed
-    catalog twin in the plan) and the eager-agg pushdown."""
+    bucketed-SMJ 7.1-7.4 s, bucketed-SHJ 6.7-6.8 s — BENCH.md r5).
+    This guard asserts the query kept the winning shape: raw parquet
+    fact scans (no bucketed catalog twin in the plan) and the eager-agg
+    pushdown."""
     plan = _plan(spark, sf_dir, "q_join_multiway")
     assert "partial_sum" in plan or "partial_count" in plan, plan[:3000]
     assert "pypiper_b_" not in plan, plan[:3000]
@@ -1298,3 +1298,115 @@ def test_pagerank_never_broadcasts_the_cached_edge_side(spark, sf_dir):
         )
         edge_side = "InMemoryTableScan" in child and "outdeg" in child
         assert not edge_side, "\n".join(lines[i : i + 6])
+
+
+def test_copurchase_pairs_plan_is_basket_aggregate_not_self_join(spark):
+    """r12 pin: order-blocked pair generation must come from ONE
+    basket collect_set + in-row explosion, not the r5-r11 distinct +
+    self-join (4 exchanges -> 2). A join reappearing here means the
+    optimization was reverted (it was once lost to a plan-capture
+    toggle — see OPTIMIZATION_r12.md)."""
+    from tests.conftest import SF_DIR
+    from pypiper_spark.registry import all_queries
+
+    df = all_queries()["q_copurchase_pairs"].fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "collect_set" in plan, plan[:2000]
+    assert "Join" not in plan, plan[:2000]
+    assert plan.count("Exchange") <= 2, plan[:2000]
+
+
+def test_ann_decision_evaluates_ann_subtree_once(spark):
+    """r12 pin: _ann_decision must produce n_ret/n_hit in ONE pass over
+    the ann frame and checkpoint the per-probe frame, so the ANN
+    subtree (a data-scaled corpus join at 100 TB) runs exactly once.
+    The checkpoint shows up as an ExistingRDD scan in every consumer's
+    plan; the fused counting keeps results identical to the old
+    two-subtree form, asserted against hand-computed values."""
+    from pypiper_spark.queries.vectors import _ann_decision
+
+    ann = spark.createDataFrame(
+        [(1, 10), (1, 11), (2, 10)], "probe_id long, vec_id long"
+    )
+    exact = spark.createDataFrame(
+        [(1, 10, 0.9), (1, 12, 0.8), (2, 10, 0.7), (2, 11, 0.6)],
+        "probe_id long, vec_id long, cos_sim double",
+    )
+    n_corpus = spark.createDataFrame(
+        [(1, 4), (2, 4)], "probe_id long, n_corpus long"
+    )
+    out = _ann_decision(spark, ann, exact, n_corpus, k=2, floor=0.4)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" in plan, plan[:2000]
+    rows = {r.probe_id: r for r in out.collect()}
+    # probe 1: returned {10,11}, exact {10,12} -> n_hit 1 of n_exact 2
+    # probe 2: returned {10}, exact {10,11} -> n_hit 1 of n_exact 2
+    # avg recall 0.5 >= 0.4 and 1 <= n_ret <= 2 for both probes
+    assert rows[1].recall_ok and rows[1].k_rows_ok
+    assert rows[1].exact_best_sim == 0.9
+    assert abs(rows[1].exact_topk_sum - 1.7) < 1e-9
+    assert rows[2].exact_best_sim == 0.7
+
+
+def test_pagerank_edge_join_persisted_at_small_scale(spark, sf_dir):
+    """r13 pin: graph_pagerank persists the (src, dst, outdeg) edge-join
+    frame when the source is under the 256 MB gate, so the per-round
+    rank join reads an InMemoryTableScan instead of re-executing the
+    edges><degrees join once per unrolled round (A/B at sf0.1:
+    7.58/7.07/5.54 -> 4.22/5.15/3.15 s)."""
+    from pypiper_spark.queries.graph import graph_pagerank
+    from pypiper_spark.session import release_query_caches
+
+    df = graph_pagerank(spark, sf_dir)
+    try:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    finally:
+        release_query_caches(spark)
+
+
+def test_star_components_round_has_no_per_round_distinct():
+    """r13 pin: _star_components' fixpoint loop must NOT re-dedup the
+    large-star stream with .distinct() — smins is a min-aggregate and
+    the round rollup's groupBy(a, b) already dedups, so the old
+    distinct was a pure extra data-scaled Exchange per round
+    (interleaved A/B at sf0.1: 8.78/6.47/5.60 -> 7.40/5.45/5.11 s,
+    labels bit-equal, same round count). A .distinct() reappearing in
+    the loop body means the optimization was reverted. The
+    initial edge canonicalization BEFORE the loop keeps its distinct
+    (input sym may carry duplicate edges)."""
+    import inspect
+
+    from pypiper_spark.queries.dedup import _star_components
+
+    src = inspect.getsource(_star_components)
+    loop_body = src.split("for rounds in range", 1)[1].split(
+        "Star forest -> labels", 1
+    )[0]
+    code_only = "\n".join(
+        line for line in loop_body.splitlines()
+        if not line.lstrip().startswith("#")
+    )
+    assert ".distinct()" not in code_only, (
+        "per-round distinct is back in _star_components' fixpoint loop"
+    )
+
+
+def test_lsh_candidate_dedup_shuffles_slim_keys(spark, sf_dir):
+    """r13 pin: _sim_ann_lsh_topk's candidate distinct must
+    hash-partition on (probe_id, vec_id) only — the pre-r13 form
+    shuffled BOTH 64-double vectors (ev, pv) through the dedup
+    Exchange (~1 KB/row at candidate = corpus cardinality at 100 TB);
+    vectors are re-attached after the dedup. 3-way A/B at sf0.1 was
+    noise-neutral (medians old 1.48 / slim 1.42 s) with bit-equal
+    output; the win is shuffle bytes at scale (guide §2.2)."""
+    import re
+
+    from pypiper_spark.queries.vectors import _sim_ann_lsh_topk
+
+    df = _sim_ann_lsh_topk(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    assert parts, plan[:2000]
+    for keys in parts:
+        assert "ev#" not in keys and "pv#" not in keys, keys

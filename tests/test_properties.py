@@ -1073,3 +1073,153 @@ def test_right_to_erasure_conservation(spark, sf_dir):
     if by.loc["customer", "n_purged"] > 0:
         assert by.loc["orders", "n_purged"] > 0
         assert by.loc["lineitem", "n_purged"] > 0
+
+
+def _reference_components(edges: list[tuple[int, int]]) -> dict[int, int]:
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    # path-compress to final roots
+    return {n: find(n) for n in parent}
+
+
+@pytest.mark.parametrize(
+    "edges",
+    [
+        # chain (worst case for naive propagation)
+        [(i, i + 1) for i in range(60)],
+        # two stars sharing one bridge + an isolated pair
+        [(0, i) for i in range(1, 10)]
+        + [(100, 100 + i) for i in range(1, 10)]
+        + [(9, 100)]
+        + [(500, 501)],
+        # cycle
+        [(i, (i + 1) % 17) for i in range(17)],
+    ],
+)
+def test_star_components_fused_fixpoint_matches_union_find(spark, edges):
+    from pypiper_spark.queries.dedup import _star_components
+
+    sym_rows = [(a, b) for a, b in edges] + [(b, a) for a, b in edges]
+    sym = spark.createDataFrame(sym_rows, "a long, b long")
+    labels, rounds = _star_components(sym)
+    got = {r.node: r.lbl for r in labels.collect()}
+    want = _reference_components(edges)
+    # every node labeled with its component's minimum id
+    comp_min: dict[int, int] = {}
+    for n, root in want.items():
+        comp_min[root] = min(comp_min.get(root, n), n)
+    want_min = {n: comp_min[root] for n, root in want.items()}
+    assert got == want_min
+    assert rounds <= 64
+
+
+def _ref_mode_min_label(labels: list[int]) -> int:
+    """(max count, then MIN label) — the r5-r12 packed-argmax contract."""
+    from collections import Counter
+
+    c = Counter(labels)
+    best = max(c.items(), key=lambda kv: (kv[1], -kv[0]))
+    return best[0]
+
+
+def test_lpa_mode_expr_matches_packed_argmax(spark):
+    """r13 pin: the fused in-row mode (sorted-run scan) must reproduce
+    the packed (max count, min label) argmax on adversarial vote lists
+    — ties, singletons, all-equal, and random multisets."""
+    import random
+
+    from pypiper_spark.queries.graph import _LPA_MODE_EXPR
+
+    rng = random.Random(13)
+    cases = [
+        [5],
+        [3, 3, 7, 7],            # tie -> 3
+        [9, 9, 9],
+        [2, 1, 1, 2, 3],         # tie 1 vs 2 -> 1
+        [0, 0, 5, 5, 5, 1],
+    ] + [
+        [rng.randrange(20) for _ in range(rng.randrange(1, 40))]
+        for _ in range(60)
+    ]
+    rows = [(i, sorted(ls)) for i, ls in enumerate(cases)]
+    df = spark.createDataFrame(rows, "i long, ls array<bigint>").select(
+        "i", F.expr(_LPA_MODE_EXPR).alias("label")
+    )
+    got = {r.i: r.label for r in df.collect()}
+    for i, ls in enumerate(cases):
+        assert got[i] == _ref_mode_min_label(ls), (i, sorted(ls), got[i])
+
+
+def test_triangle_census_matches_bruteforce(spark):
+    """r13 pin: the node-iterator rewrite (adjacency intersections, no
+    wedge materialization) must count nodes/edges/wedges/triangles
+    exactly like the r5-r12 wedge-join form on known graphs."""
+    from itertools import combinations
+
+    graphs = [
+        # K4: 4 nodes, 6 edges, every triple a triangle
+        [(a, b) for a, b in combinations(range(4), 2)],
+        # triangle + pendant + disjoint edge
+        [(1, 2), (1, 3), (2, 3), (3, 4), (10, 11)],
+        # square (no triangles), then one diagonal (two triangles)
+        [(1, 2), (2, 3), (1, 4), (3, 4)],
+        [(1, 2), (2, 3), (1, 4), (3, 4), (1, 3)],
+        # empty graph
+        [],
+    ]
+    for edges_list in graphs:
+        e = set(edges_list)
+        nodes = {v for ab in e for v in ab}
+        wedges = [
+            (a, b, c) for (a, b) in e for (b2, c) in e if b == b2
+        ]
+        tris = [(a, b, c) for (a, b, c) in wedges if (a, c) in e]
+        if edges_list:
+            edf = spark.createDataFrame(sorted(e), "a long, b long")
+        else:
+            edf = spark.createDataFrame([], "a long, b long")
+        adj_out = edf.groupBy(F.col("a").alias("v")).agg(
+            F.collect_list("b").alias("nb_out")
+        )
+        adj_in = edf.groupBy(F.col("b").alias("v")).agg(
+            F.collect_list("a").alias("nb_in")
+        )
+        wedge_cnt = adj_out.join(adj_in, "v").agg(
+            F.coalesce(
+                F.sum(F.size("nb_out").cast("long") * F.size("nb_in")),
+                F.lit(0).cast("long"),
+            ).alias("n_wedges")
+        )
+        tri_cnt = (
+            edf.join(adj_out, edf.a == adj_out.v)
+            .join(adj_in, edf.b == adj_in.v)
+            .agg(
+                F.coalesce(
+                    F.sum(
+                        F.size(F.array_intersect("nb_out", "nb_in")).cast("long")
+                    ),
+                    F.lit(0).cast("long"),
+                ).alias("n_triangles")
+            )
+        )
+        got_w = wedge_cnt.collect()[0].n_wedges
+        got_t = tri_cnt.collect()[0].n_triangles
+        assert got_w == len(wedges), (sorted(e), got_w, len(wedges))
+        assert got_t == len(tris), (sorted(e), got_t, len(tris))
+        assert len(nodes) == (
+            edf.select(F.col("a").alias("v"))
+            .union(edf.select(F.col("b").alias("v")))
+            .distinct()
+            .count()
+        )

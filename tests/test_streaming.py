@@ -2,6 +2,8 @@
 Structured Streaming must agree (SURVEY.md section 5.2.5); plus the
 watermark late-data demo and the custom stateful operator."""
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -268,3 +270,48 @@ def test_stream_partitions_size_from_named_table(spark, tmp_path):
     # session default, the orders-keyed call sizes from orders
     assert _stream_shuffle_partitions(spark, str(tmp_path)) == 8
     assert _stream_shuffle_partitions(spark, str(tmp_path), table="orders") == 6
+
+
+def test_stage_slices_reuses_complete_dir_and_rebuilds_incomplete(spark, tmp_path):
+    from pypiper_spark.streaming.twins import _stage_slices
+
+    df = spark.range(100).select(F.col("id").alias("event_id"))
+    stage = str(tmp_path / "stage")
+    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
+    names = sorted(os.listdir(stage))
+    assert names == ["batch0.parquet", "batch1.parquet"]
+    mtimes = [os.stat(os.path.join(stage, n)).st_mtime_ns for n in names]
+    # deterministic ascending mtimes (the replay-order contract)
+    assert mtimes[0] < mtimes[1]
+    # second call: complete dir is reused untouched (no rewrite)
+    inodes = [os.stat(os.path.join(stage, n)).st_ino for n in names]
+    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
+    assert [os.stat(os.path.join(stage, n)).st_ino for n in names] == inodes
+    # incomplete dir (one file missing) is rebuilt whole
+    os.unlink(os.path.join(stage, "batch1.parquet"))
+    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
+    assert sorted(os.listdir(stage)) == ["batch0.parquet", "batch1.parquet"]
+    # content round-trips: both slices together are the input set
+    got = sorted(
+        r.event_id for r in spark.read.parquet(stage).collect()
+    )
+    assert got == list(range(100))
+
+
+def test_stage_slices_rebuilds_on_extra_stale_file(spark, tmp_path):
+    """ADVICE r12: a staging dir holding batches beyond the requested n
+    (e.g. left by an older run with a larger batch count) must be
+    rebuilt — the directory readStream would ingest the stale extras."""
+    from pypiper_spark.streaming.twins import _stage_slices
+
+    df = spark.range(100).select(F.col("id").alias("event_id"))
+    stage = str(tmp_path / "stage")
+    _stage_slices(df, stage, 3, lambda k: F.col("event_id") % 3 == k)
+    assert sorted(os.listdir(stage)) == [
+        "batch0.parquet", "batch1.parquet", "batch2.parquet"
+    ]
+    # now request n=2 over the same dir: batch2 is stale and must go
+    _stage_slices(df, stage, 2, lambda k: F.col("event_id") % 2 == k)
+    assert sorted(os.listdir(stage)) == ["batch0.parquet", "batch1.parquet"]
+    got = sorted(r.event_id for r in spark.read.parquet(stage).collect())
+    assert got == list(range(100))

@@ -878,3 +878,37 @@ def test_txn_watermark_retention_caveat(spark, small_df, tmp_path):
     assert tf.last_txn_version(root, "a") == 5
     tf.expire_snapshots(root, keep_last=2)
     assert tf.last_txn_version(root, "a") == -1
+
+
+def test_tableformat_hardlink_clone_isolated(spark, tmp_path):
+    """r13 pin (cdc-upsert pristine-table lifecycle): committing to a
+    hardlink clone must never disturb the pristine table — the format
+    only ever creates new files and os.replace's the CURRENT pointer."""
+    import shutil
+
+    from pypiper_spark import tableformat as tf
+
+    pristine = str(tmp_path / "base")
+    df = spark.createDataFrame(
+        [(1, "A", 10), (2, "B", 20), (3, "A", 30)],
+        "o_orderkey long, o_orderstatus string, cents long",
+    )
+    tf.create(spark, pristine, df)
+    clone = str(tmp_path / "work")
+    shutil.copytree(pristine, clone, copy_function=os.link)
+    changes = spark.createDataFrame(
+        [(2, "U", 999), (9, "I", 1)],
+        "o_orderkey long, o_orderstatus string, cents long",
+    )
+    tf.merge_on_read(spark, clone, changes, key="o_orderkey", txn=("t", 0))
+    assert tf.current_id(clone) == 2
+    # pristine untouched: still snapshot 1, original content
+    assert tf.current_id(pristine) == 1
+    base_rows = {
+        r.o_orderkey: r.cents for r in tf.read(spark, pristine).collect()
+    }
+    assert base_rows == {1: 10, 2: 20, 3: 30}
+    clone_rows = {
+        r.o_orderkey: r.cents for r in tf.read(spark, clone).collect()
+    }
+    assert clone_rows == {1: 10, 2: 999, 3: 30, 9: 1}

@@ -2,20 +2,14 @@
 
 Usage: python tools/scale_bench.py <sf_dir> [query ...]
 
-Companion to tools/scale_build.py for the 100x escalation. Differences
-from bench.py (which stays the driver contract):
+Companion to tools/scale_build.py. Differences from bench.py (which
+stays the driver contract; this tool shares its HEADLINE list and
+DuckDB setup):
 
 - ONE timed run per query, after a single cheap JVM/codegen warmup
-  query. At 100x (60M lineitem rows) the work term is tens of seconds
+  query. On a large scaled corpus the work term is tens of seconds
   against a ~0.3s warmup effect, so warm-vs-cold no longer matters;
-  running everything twice would double a ~10-minute wall.
-- q_join_theta_range is BACK on the default board (r12, VERDICT r11
-  #2): scale_build now shifts each copy's event values into a disjoint
-  window (VALUE_OFFSET), so band matches stay within-copy and the
-  theta workload scales linearly like real growth. Under the old
-  copy-identical values the 100x run produced a 2.26e9-row answer — a
-  quadratically different workload, which is why the row was excluded
-  through r11.
+  running everything twice would double the wall time.
 - DuckDB twins run under a watchdog (interrupt at DUCK_CAP_SEC) so one
   runaway oracle cannot eat the session; a capped query reports null.
 
@@ -33,71 +27,14 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-DEFAULT = [
-    "q_pricing_summary",
-    "q_agg_group",
-    "q_join_broadcast",
-    "q_join_multiway",
-    "q_join_theta_range",
-    "q_win_topk_per_group",
-    "q_win_frame_rows",
-    "q_stream_session",
-    "q_text_tfidf",
-    "q_text_quality",
-    "q_dedup_ngram_jaccard",
-    "q_sim_topk_bruteforce",
-    "q_limit_topk",
-    "q_events_funnel",
-    "q_shipping_priority",
-]
+from bench import HEADLINE, duck_connect  # noqa: E402  (after the path insert)
 
 DUCK_CAP_SEC = int(os.environ.get("DUCK_CAP_SEC", "480"))
-
-# At-100x claimed seconds for the PINNED floor-class rows whose scale
-# numbers previously lived only in BENCH.md prose (VERDICT r11 #5 —
-# the graph pack's sublinear-at-100x evidence had no machine check, so
-# a data-term regression at scale needed a judge re-reading prose to
-# notice). Any benched query present here is diffed against its claim
-# and >40% divergences land in the output JSON as `claim_divergences`
-# — warn-only, same semantics as bench.py's 25% gate but wider because
-# 100x timings carry page-cache swings the sf0.1 warm protocol
-# doesn't (the tfidf 29s-cold vs 5.7s-warm note in BENCH_SCALE100).
-#
-# PROTOCOL: these are WARM numbers — check them with SCALE_BENCH_WARM=1
-# and ONE query per invocation (fresh JVM; three graph queries stacked
-# in one 8g session OOMed, r12). A cold single run measures the
-# per-corpus machinery build instead (r12 solo colds: minhash 45.5 vs
-# 2-3 warm, simhash 38.8 vs 8-10 — the artifact/persist lifecycle, not
-# the query). Claims re-centered r12 on this protocol, this corpus.
-SCALE_CLAIMED_SEC = {
-    "q_graph_pagerank": 60.0,
-    "q_graph_triangles": 25.0,
-    "q_graph_label_propagation": 170.0,
-    "q_dedup_simhash": 9.0,
-    "q_dedup_minhash": 2.7,
-    "q_dedup_cdc_apply": 7.5,
-}
-
-
-def scale_claim_divergences(measured: dict[str, float | None]) -> dict[str, dict]:
-    out: dict[str, dict] = {}
-    for name, claimed in SCALE_CLAIMED_SEC.items():
-        t = measured.get(name)
-        if t is None or claimed <= 0:
-            continue
-        rel = abs(t - claimed) / claimed
-        if rel > 0.40:
-            out[name] = {
-                "claimed": claimed,
-                "measured": round(t, 3),
-                "rel": round(rel, 3),
-            }
-    return out
 
 
 def main() -> int:
     sf_dir = sys.argv[1]
-    names = sys.argv[2:] or DEFAULT
+    names = sys.argv[2:] or HEADLINE
 
     from pypiper_spark.registry import all_queries
     from pypiper_spark.session import get_spark
@@ -141,15 +78,12 @@ def main() -> int:
         print(f"  bucket ingest: {bucket_ingest_sec}s", file=sys.stderr, flush=True)
 
     # SCALE_BENCH_WARM=1: per-query warmup pass, then the timed run —
-    # the bench.py warm protocol at 100x (warmup's persists ARE reused
-    # by the timed run; that is the documented protocol). This is the
-    # protocol the SCALE_CLAIMED_SEC floor claims are stated under:
-    # the floor-class rows (graph pack, dedup wraps) carry per-corpus
-    # machinery whose cold build is 4-15x their steady-state read, so
-    # a single cold run measures artifact construction, not the query.
-    # The DEFAULT 15-query board stays single-run (its rows have no
-    # such machinery and the two-pass board protocol covers cache
-    # swings — see BENCH_SCALE100.json "protocol").
+    # the bench.py warm protocol (warmup's persists ARE reused by the
+    # timed run). Use it, one query per invocation, for rows that carry
+    # per-corpus machinery (graph pack, dedup wraps): their cold build
+    # is 4-15x their steady-state read, so a single cold run measures
+    # artifact construction, not the query. The default headline board
+    # stays single-run (its rows have no such machinery).
     warm_mode = os.environ.get("SCALE_BENCH_WARM") == "1"
     for name in names:
         if warm_mode:
@@ -162,14 +96,7 @@ def main() -> int:
         print(f"  spark {name}: {spark_t[name]}s", file=sys.stderr, flush=True)
 
     duck_t: dict[str, float | None] = {}
-    import duckdb
-
-    con = duckdb.connect()
-    con.sql(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-    for t in (
-        "region nation customer supplier part orders lineitem events documents embeddings"
-    ).split():
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    con = duck_connect(sf_dir)
     for name in names:
         from pypiper_spark.registry import resolve_oracle
         oracle = resolve_oracle(qs[name], sf_dir)
@@ -196,7 +123,6 @@ def main() -> int:
         "duckdb": duck_t,
         "duckdb_total_sec": round(sum(v for v in duck_t.values() if v), 2),
         "duck_cap_sec": DUCK_CAP_SEC,
-        "claim_divergences": scale_claim_divergences(spark_t),
     }
     print(json.dumps(out))
     return 0
