@@ -75,16 +75,6 @@ def sql_davg(expr: str) -> str:
     return f"(CAST(sum({sql_cents(expr)}) AS DOUBLE) / 100 / count({expr}))"
 
 
-def money2(col: Column | str, precision: int = 12) -> Column:
-    """Cast a 2-decimal money column to exact decimal — for WINDOW sums
-    and the documented beyond-long-range fallback."""
-    return _c(col).cast(f"decimal({precision},2)")
-
-
-def sql_money2(expr: str, precision: int = 12) -> str:
-    return f"CAST({expr} AS DECIMAL({precision},2))"
-
-
 def round6(col: Column) -> Column:
     """For inherently-float reductions: granularity 1e-6 >> ~1e-12 error."""
     return F.round(col, 6)

@@ -92,15 +92,6 @@ def _truth_pairs(spark: SparkSession, sf_dir: str, threshold: float) -> DataFram
     )
 
 
-def _minhash_signatures(tok: DataFrame) -> DataFrame:
-    """One row per doc: minhash_i = min over words of xxhash64(i, word)."""
-    mins = [
-        F.min(F.xxhash64(F.lit(i), F.col("word"))).alias(f"mh{i}")
-        for i in range(_N_PERM)
-    ]
-    return tok.groupBy("doc_id").agg(*mins)
-
-
 # Minhash-agreement prefilter: a candidate pair's 32 minhashes are an
 # unbiased Jaccard estimator, already computed and 32 long-compares
 # cheap — vs array_intersect's per-pair hash-set build. At j=0.9 the

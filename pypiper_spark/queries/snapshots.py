@@ -2,7 +2,9 @@
 manifest-pointer table format (pypiper_spark/tableformat.py — VERDICT
 r6 "What's missing" #1).
 
-The demo table is built once per corpus under the system temp dir:
+Every demo table here is a ``tableformat.build`` step list, one commit
+per step: built once per corpus under the system temp dir (``_root``)
+and resumed after a crash. The first one:
 
     snapshot 1  "create"  orders projected to (o_orderkey,
                           o_orderstatus, cents)  [integer cents —
@@ -23,6 +25,7 @@ format's write+read round-trip, not just the query math.
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 
@@ -57,49 +60,66 @@ _SNAP_CTES = """
 """
 
 
-def _table_root(sf_dir: str) -> str:
-    # corpus_key stat-hashes the source table (ADVICE r7): regenerating
-    # orders.parquet in place invalidates the cached demo table instead
-    # of serving stale snapshots against a fresh oracle
-    key = corpus_key(sf_dir, "snap_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tbl_{key}")
+def _root(sf_dir: str, label: str, table: str) -> str:
+    """Where a demo table lives: ``<tempdir>/pypiper_<label>_<key>``.
+    The key stat-hashes the source ``table`` (ADVICE r7), so
+    regenerating it in place moves the table to a fresh root instead
+    of serving stale snapshots against a fresh oracle; the label names
+    the recipe, and bumping it (``pmerge_demo_v4``) does the same for
+    a changed recipe."""
+    key = corpus_key(sf_dir, label, tables=(table,))
+    return os.path.join(tempfile.gettempdir(), f"pypiper_{label}_{key}")
+
+
+def _orders_cents(
+    spark: SparkSession, sf_dir: str, year: bool = False
+) -> DataFrame:
+    """orders as (o_orderkey, o_orderstatus[, o_year], cents): integer
+    cents, exact arithmetic end to end."""
+    year_col = [F.year("o_orderdate").alias("o_year")] if year else []
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        "o_orderstatus",
+        *year_col,
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    )
+
+
+def _synthetic(
+    spark: SparkSession, sf_dir: str, offset: int, status: str, cents: int
+) -> DataFrame:
+    """One synthetic row per 1000th order: its key shifted past every
+    real key by ``offset``, a fixed status and fixed cents."""
+    o = load_table(spark, sf_dir, "orders")
+    return o.filter(F.col("o_orderkey") % 1000 == 0).select(
+        (F.col("o_orderkey") + offset).alias("o_orderkey"),
+        F.lit(status).alias("o_orderstatus"),
+        F.lit(cents).cast("long").alias("cents"),
+    )
 
 
 def _changes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    updates = o.filter(F.col("o_orderkey") % 3 == 0).select(
-        "o_orderkey",
-        "o_orderstatus",
-        (F.round(F.col("o_totalprice") * 100).cast("long") + 1000).alias("cents"),
-    )
-    inserts = o.filter(F.col("o_orderkey") % 1000 == 0).select(
-        (F.col("o_orderkey") + 2000000000).alias("o_orderkey"),
-        F.lit("N").alias("o_orderstatus"),
-        F.lit(5000).cast("long").alias("cents"),
-    )
-    return updates.unionByName(inserts)
+    """The q_upsert_merge change set: every 3rd key gets +10.00,
+    synthetic keys insert with status 'N'."""
+    updates = _orders_cents(spark, sf_dir).filter(
+        F.col("o_orderkey") % 3 == 0
+    ).select("o_orderkey", "o_orderstatus", (F.col("cents") + 1000).alias("cents"))
+    return updates.unionByName(_synthetic(spark, sf_dir, 2000000000, "N", 5000))
+
+
+def _create_and_merge(spark: SparkSession, sf_dir: str, root: str) -> list:
+    """Snapshots 1-2 of the demo table, as tf.build steps."""
+    return [
+        lambda: tf.create(spark, root, _orders_cents(spark, sf_dir)),
+        lambda: tf.merge(spark, root, _changes(spark, sf_dir), key="o_orderkey"),
+    ]
 
 
 def ensure_demo_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build (or resume building) the two-snapshot demo table.
-    Idempotent and crash-tolerant: residue from an interrupted build
-    is gc'd and the remaining commits are replayed."""
-    root = _table_root(sf_dir)
-    cur = tf.current_id(root)
-    if cur >= 2:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)  # crash residue blocks the next commit id
-    if cur == 0:
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        tf.create(spark, root, base)
-    if tf.current_id(root) == 1:
-        tf.merge(spark, root, _changes(spark, sf_dir), key="o_orderkey")
-    return root
+    """Build (or resume building, tf.build) the two-snapshot demo
+    table."""
+    root = _root(sf_dir, "snap_demo", "orders")
+    return tf.build(root, _create_and_merge(spark, sf_dir, root))
 
 
 _HISTORY_ORACLE = """
@@ -143,38 +163,24 @@ def table_snapshot_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_table_manifest_pruning: file-skipping via manifest min/max stats
 # ---------------------------------------------------------------------------
 
-def _pruning_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "prune_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tblp_{key}")
-
-
 def ensure_pruning_table(spark: SparkSession, sf_dir: str) -> str:
     """Orders laid out the way a clustered 100 TB table is: three
     year-banded appends (pre-1994, 1994-1996, post-1996), one file
     each, with per-file min/max on o_year in every manifest. The
     year bands make file-level pruning REAL: a single-year query
     provably overlaps exactly one file."""
-    root = _pruning_root(sf_dir)
-    if tf.current_id(root) >= 3:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.year("o_orderdate").alias("o_year"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    bands = [
-        o.filter(F.col("o_year") < 1994),
-        o.filter((F.col("o_year") >= 1994) & (F.col("o_year") <= 1996)),
-        o.filter(F.col("o_year") > 1996),
-    ]
-    if tf.current_id(root) == 0:
-        tf.create(spark, root, bands[0].coalesce(1), stats_cols=("o_year",))
-    while tf.current_id(root) < 3:
-        tf.append(spark, root, bands[tf.current_id(root)].coalesce(1))
-    return root
+    root = _root(sf_dir, "prune_demo", "orders")
+
+    def band(cond: str) -> DataFrame:
+        return _orders_cents(spark, sf_dir, year=True).filter(cond).coalesce(1)
+
+    return tf.build(root, [
+        lambda: tf.create(
+            spark, root, band("o_year < 1994"), stats_cols=("o_year",)
+        ),
+        lambda: tf.append(spark, root, band("o_year >= 1994 AND o_year <= 1996")),
+        lambda: tf.append(spark, root, band("o_year > 1996")),
+    ])
 
 
 _PRUNING_ORACLE = """
@@ -255,38 +261,27 @@ def stream_table_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # operation in sequence, answers still exact
 # ---------------------------------------------------------------------------
 
-def _lifecycle_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "lifecycle_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tbll_{key}")
-
-
 def ensure_lifecycle_table(spark: SparkSession, sf_dir: str) -> str:
     """create (pre-1996 orders) -> append (1996+ orders) -> merge (the
     q_upsert_merge change set) -> compact (file consolidation) ->
     expire (keep the last 2 snapshots). Five commits, four operation
     kinds, ending in a bounded-history compacted table whose CURRENT
     rows must still equal the plain-SQL merge recompute."""
-    root = _lifecycle_root(sf_dir)
-    if tf.current_id(root) >= 4:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.year("o_orderdate").alias("o_year"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    if tf.current_id(root) == 0:
-        tf.create(spark, root, o.filter(F.col("o_year") < 1996).coalesce(2))
-    if tf.current_id(root) == 1:
-        tf.append(spark, root, o.filter(F.col("o_year") >= 1996).coalesce(2))
-    if tf.current_id(root) == 2:
-        tf.merge(spark, root, _changes(spark, sf_dir), key="o_orderkey")
-    if tf.current_id(root) == 3:
+    root = _root(sf_dir, "lifecycle_demo", "orders")
+
+    def half(cond: str) -> DataFrame:
+        return _orders_cents(spark, sf_dir, year=True).filter(cond).coalesce(2)
+
+    def compact_and_expire() -> None:
         tf.compact(spark, root, target_files=2)
         tf.expire_snapshots(root, keep_last=2)
-    return root
+
+    return tf.build(root, [
+        lambda: tf.create(spark, root, half("o_year < 1996")),
+        lambda: tf.append(spark, root, half("o_year >= 1996")),
+        lambda: tf.merge(spark, root, _changes(spark, sf_dir), key="o_orderkey"),
+        compact_and_expire,
+    ])
 
 
 _LIFECYCLE_ORACLE = f"""
@@ -334,11 +329,6 @@ def table_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_table_merge_partial: stats-driven partial-rewrite MERGE
 # ---------------------------------------------------------------------------
 
-def _pmerge_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "pmerge_demo_v4", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tblm_{key}")
-
-
 # Row groups are the parquet scan-split unit: with one coalesced file
 # per band (the shape the carry tests pin), default ~128 MB groups
 # leave a 100x-corpus band scan at 1-2 tasks on 32 cores. 8 MB groups
@@ -361,40 +351,25 @@ def ensure_partial_merge_table(spark: SparkSession, sf_dir: str) -> str:
     of the table, so the partial-rewrite and snapshot-delta claims
     are exercised at a realistic locality. The ROWS equal a full
     merge, which is what the oracle checks."""
-    root = _pmerge_root(sf_dir)
-    if tf.current_id(root) >= 4:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    mx = int(o.agg(F.max("o_orderkey")).first()[0])  # 1-row bounded
-    k1, k2 = mx // 3, 2 * (mx // 3)
-    if tf.current_id(root) == 0:
-        tf.create(
-            spark, root,
-            o.filter(F.col("o_orderkey") < k1)
-            .repartitionByRange(4, "o_orderkey"),
-            stats_cols=("o_orderkey",), options=_PM_WRITE_OPTS,
-        )
-    if tf.current_id(root) == 1:
-        tf.append(
-            spark, root,
-            o.filter((F.col("o_orderkey") >= k1) & (F.col("o_orderkey") < k2))
-            .repartitionByRange(4, "o_orderkey"),
-            options=_PM_WRITE_OPTS,
-        )
-    if tf.current_id(root) == 2:
-        tf.append(
-            spark, root,
-            o.filter(F.col("o_orderkey") >= k2)
-            .repartitionByRange(4, "o_orderkey"),
-            options=_PM_WRITE_OPTS,
-        )
-    if tf.current_id(root) == 3:
+    root = _root(sf_dir, "pmerge_demo_v4", "orders")
+
+    @functools.cache
+    def orders() -> tuple[DataFrame, int, int, int]:
+        """orders, its max key and the two tertile cuts; the max is a
+        1-row bounded job, run once per build."""
+        o = _orders_cents(spark, sf_dir)
+        mx = int(o.agg(F.max("o_orderkey")).first()[0])
+        return o, mx, mx // 3, 2 * (mx // 3)
+
+    def band(i: int) -> DataFrame:
+        """Key tertile i, range-split into 4 key-disjoint files."""
+        o, _, k1, k2 = orders()
+        key = F.col("o_orderkey")
+        cond = [key < k1, (key >= k1) & (key < k2), key >= k2][i]
+        return o.filter(cond).repartitionByRange(4, "o_orderkey")
+
+    def merge() -> None:
+        o, mx, k1, k2 = orders()
         lo, hi = k1, k1 + (k2 - k1) // 2
         updates = o.filter(
             (F.col("o_orderkey") >= lo) & (F.col("o_orderkey") < hi)
@@ -410,7 +385,16 @@ def ensure_partial_merge_table(spark: SparkSession, sf_dir: str) -> str:
             spark, root, updates.unionByName(inserts), key="o_orderkey",
             options=_PM_WRITE_OPTS, target_files=4,
         )
-    return root
+
+    return tf.build(root, [
+        lambda: tf.create(
+            spark, root, band(0),
+            stats_cols=("o_orderkey",), options=_PM_WRITE_OPTS,
+        ),
+        lambda: tf.append(spark, root, band(1), options=_PM_WRITE_OPTS),
+        lambda: tf.append(spark, root, band(2), options=_PM_WRITE_OPTS),
+        merge,
+    ])
 
 
 # pmerge change-set CTEs shared by the partial-merge and time-travel
@@ -552,11 +536,6 @@ def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_table_schema_evolution: add/rename/drop column, exact-oracled
 # ---------------------------------------------------------------------------
 
-def _evolution_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "schema_evo_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tble_{key}")
-
-
 def ensure_evolution_table(spark: SparkSession, sf_dir: str) -> str:
     """Five commits across three schema epochs:
 
@@ -570,32 +549,21 @@ def ensure_evolution_table(spark: SparkSession, sf_dir: str) -> str:
     where snapshot-1 files fill year_bucket with NULL and serve
     price_cents from their physical 'cents' column — while time
     travel to snapshot 1 still returns the ORIGINAL three columns."""
-    root = _evolution_root(sf_dir)
-    if tf.current_id(root) >= 5:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.year("o_orderdate").alias("o_year"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    if tf.current_id(root) == 0:
-        tf.create(
+    root = _root(sf_dir, "schema_evo_demo", "orders")
+
+    def orders(cond: str) -> DataFrame:
+        return _orders_cents(spark, sf_dir, year=True).filter(cond)
+
+    return tf.build(root, [
+        lambda: tf.create(
+            spark, root, orders("o_year < 1996").drop("o_year").coalesce(2)
+        ),
+        lambda: tf.add_column(root, "year_bucket", "bigint"),
+        lambda: tf.rename_column(root, "cents", "price_cents"),
+        lambda: tf.append(
             spark,
             root,
-            o.filter(F.col("o_year") < 1996).drop("o_year").coalesce(2),
-        )
-    if tf.current_id(root) == 1:
-        tf.add_column(root, "year_bucket", "bigint")
-    if tf.current_id(root) == 2:
-        tf.rename_column(root, "cents", "price_cents")
-    if tf.current_id(root) == 3:
-        tf.append(
-            spark,
-            root,
-            o.filter(F.col("o_year") >= 1996)
+            orders("o_year >= 1996")
             .select(
                 "o_orderkey",
                 "o_orderstatus",
@@ -603,10 +571,9 @@ def ensure_evolution_table(spark: SparkSession, sf_dir: str) -> str:
                 F.col("cents").alias("price_cents"),
             )
             .coalesce(2),
-        )
-    if tf.current_id(root) == 4:
-        tf.drop_column(root, "o_orderstatus")
-    return root
+        ),
+        lambda: tf.drop_column(root, "o_orderstatus"),
+    ])
 
 
 _EVOLUTION_ORACLE = """
@@ -771,33 +738,16 @@ def table_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_table_rollback: O(1) revert of a bad commit, history preserved
 # ---------------------------------------------------------------------------
 
-def _rollback_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "rollback_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tblr_{key}")
-
-
 def ensure_rollback_table(spark: SparkSession, sf_dir: str) -> str:
     """create (v1 cents) -> merge (the q_upsert_merge change set —
     playing the 'bad deploy' commit) -> rollback to snapshot 1.
     CURRENT must read exactly v1 again while snapshot 2 stays
     time-travel-readable."""
-    root = _rollback_root(sf_dir)
-    if tf.current_id(root) >= 3:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    if tf.current_id(root) == 0:
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        tf.create(spark, root, base)
-    if tf.current_id(root) == 1:
-        tf.merge(spark, root, _changes(spark, sf_dir), key="o_orderkey")
-    if tf.current_id(root) == 2:
-        tf.rollback(root, to_snapshot=1)
-    return root
+    root = _root(sf_dir, "rollback_demo", "orders")
+    return tf.build(root, [
+        *_create_and_merge(spark, sf_dir, root),
+        lambda: tf.rollback(root, to_snapshot=1),
+    ])
 
 
 _ROLLBACK_ORACLE = """
@@ -874,33 +824,26 @@ def table_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PIPE_SHARD_DOCS = 8
 
 
-def _pipeline_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "pipeline_demo_v1", tables=("documents",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_pipe_{key}")
-
-
 def ensure_pipeline_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (or resume building) the five-snapshot pipeline table.
-    Idempotent and crash-tolerant like ensure_demo_table: residue from
-    an interrupted build is gc'd and remaining commits replay."""
+    Idempotent and crash-tolerant through tf.build: residue from an
+    interrupted build is gc'd and only the missing commits replay."""
     from pyspark.sql.window import Window
 
     from pypiper_spark.queries.dedup import _HEX
     from pypiper_spark.queries.llm_prep import gopher_passed
 
-    root = _pipeline_root(sf_dir)
-    if tf.current_id(root) >= 5:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)  # crash residue blocks the next commit id
-    if tf.current_id(root) == 0:
+    root = _root(sf_dir, "pipeline_demo_v1", "documents")
+
+    def ingest() -> None:
         d = load_table(spark, sf_dir, "documents")
         tf.create(
             spark,
             root,
             gopher_passed(d).select("doc_id", "lang", "source", "n_tok", "text"),
         )
-    if tf.current_id(root) == 1:
+
+    def dedup() -> None:
         s1 = tf.read(spark, root, 1)
         surv = (
             s1.groupBy(F.md5(F.col("text").cast("binary")).alias("k"))
@@ -912,11 +855,8 @@ def ensure_pipeline_table(spark: SparkSession, sf_dir: str) -> str:
             .select("s.*")
         )
         tf.overwrite(spark, root, surv)
-    if tf.current_id(root) == 2:
-        tf.add_column(root, "split", "string")
-    if tf.current_id(root) == 3:
-        tf.add_column(root, "shard", "bigint")
-    if tf.current_id(root) == 4:
+
+    def split_and_shard() -> None:
         s2 = tf.read(spark, root, 2)
         md = "md5(cast(text as binary))"
         bucket = (
@@ -944,7 +884,14 @@ def ensure_pipeline_table(spark: SparkSession, sf_dir: str) -> str:
             )
         )
         tf.overwrite(spark, root, final)
-    return root
+
+    return tf.build(root, [
+        ingest,
+        dedup,
+        lambda: tf.add_column(root, "split", "string"),
+        lambda: tf.add_column(root, "shard", "bigint"),
+        split_and_shard,
+    ])
 
 
 def _pipeline_table_oracle() -> str:
@@ -1122,11 +1069,6 @@ def _spipe_batch_col():
     ).cast("long")
 
 
-def _spipe_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "stream_corpus_v2", tables=("documents",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_spc_{key}")
-
-
 def _spipe_enrich(df: DataFrame) -> DataFrame:
     """Batch rows -> rows + dedup signatures: content key h (md5),
     distinct-token xxhash64 set th, its size nw, and raw token count
@@ -1227,13 +1169,12 @@ def _spipe_classify(b: DataFrame, corpus: DataFrame | None) -> DataFrame:
 
 def ensure_stream_corpus_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (or resume) the 4-snapshot streaming-corpus table.
-    Idempotent: a finished table short-circuits; a half-built one
-    resumes from its stream checkpoint with crash residue gc'd."""
-    root = _spipe_root(sf_dir)
-    if tf.current_id(root) >= _SPIPE_BATCHES:
-        return root
+    Idempotent (run_stream_corpus_build): a finished table
+    short-circuits; a half-built one resumes from its stream
+    checkpoint with crash residue gc'd."""
     from pypiper_spark.streaming.twins import run_stream_corpus_build
 
+    root = _root(sf_dir, "stream_corpus_v2", "documents")
     run_stream_corpus_build(spark, sf_dir, root)
     return root
 
@@ -1373,40 +1314,19 @@ _DV_DEL1 = "o_orderstatus = 'F' AND o_orderkey % 10 < 3"
 _DV_DEL2 = "cents >= 30000000"
 
 
-def _dv_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "dv_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tbldv_{key}")
-
-
 def ensure_dv_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (or resume building) the four-snapshot deletion-vector
-    demo table. Idempotent and crash-tolerant like ensure_demo_table:
+    demo table. Idempotent and crash-tolerant through tf.build:
     residue is gc'd, remaining commits replay from current_id."""
-    root = _dv_root(sf_dir)
-    if tf.current_id(root) >= 4:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    o = load_table(spark, sf_dir, "orders")
-    if tf.current_id(root) == 0:
-        base = o.select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        tf.create(spark, root, base)
-    if tf.current_id(root) == 1:
-        tf.delete_where(spark, root, _DV_DEL1)
-    if tf.current_id(root) == 2:
-        tf.delete_where(spark, root, _DV_DEL2)
-    if tf.current_id(root) == 3:
-        inserts = o.filter(F.col("o_orderkey") % 1000 == 0).select(
-            (F.col("o_orderkey") + 3000000000).alias("o_orderkey"),
-            F.lit("N").alias("o_orderstatus"),
-            F.lit(4242).cast("long").alias("cents"),
-        )
-        tf.append(spark, root, inserts)
-    return root
+    root = _root(sf_dir, "dv_demo", "orders")
+    return tf.build(root, [
+        lambda: tf.create(spark, root, _orders_cents(spark, sf_dir)),
+        lambda: tf.delete_where(spark, root, _DV_DEL1),
+        lambda: tf.delete_where(spark, root, _DV_DEL2),
+        lambda: tf.append(
+            spark, root, _synthetic(spark, sf_dir, 3000000000, "N", 4242)
+        ),
+    ])
 
 
 _DV_ORACLE = f"""
@@ -1495,9 +1415,30 @@ def table_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _wap_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "wap_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tblw_{key}")
+def _audited_append(
+    spark: SparkSession, root: str, bad: DataFrame, good: DataFrame,
+    col: str, what: str,
+) -> None:
+    """One write-audit-publish delivery, the shared step of the WAP and
+    GDPR demo tables: the corrupt first delivery ``bad`` (negative
+    ``col`` values planted) stages, fails its audit and is aborted;
+    the clean redelivery ``good`` stages, passes and is published.
+    Only ``good`` ever reaches CURRENT."""
+    for df, planted in ((bad, True), (good, False)):
+        sid = tf.stage_append(spark, root, df)
+        n_neg = (
+            tf.read(spark, root, snapshot_id=sid).filter(F.col(col) < 0).count()
+        )
+        if (n_neg > 0) != planted:  # pragma: no cover - planted, deterministic
+            raise RuntimeError(
+                f"{what}: the planted bad rows are missing"
+                if planted
+                else f"{what}: the clean delivery failed its audit"
+            )
+        if planted:
+            tf.abort_staged(root, sid)
+        else:
+            tf.publish(root, sid)
 
 
 def _wap_batch(spark: SparkSession, sf_dir: str, bad: bool) -> DataFrame:
@@ -1517,38 +1458,19 @@ def _wap_batch(spark: SparkSession, sf_dir: str, bad: bool) -> DataFrame:
 def ensure_wap_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (or resume building) the WAP demo table: create, then the
     bad-batch stage->audit->abort, then the good-batch
-    stage->audit->publish. Crash-tolerant: leftover staged snapshots
-    from an interrupted run are aborted and the workflow replays."""
-    root = _wap_root(sf_dir)
-    if tf.current_id(root) >= 2:
-        return root
-    for sid in tf.staged_snapshots(root):  # interrupted run's stage
-        tf.abort_staged(root, sid)
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)  # unmarked crash residue
-    if tf.current_id(root) == 0:
-        base = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey",
-            "o_orderstatus",
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-        )
-        tf.create(spark, root, base)
-    # the WAP loop: bad batch must NEVER reach CURRENT
-    sid = tf.stage_append(spark, root, _wap_batch(spark, sf_dir, bad=True))
-    n_bad = (
-        tf.read(spark, root, snapshot_id=sid).filter(F.col("cents") < 0).count()
-    )
-    if n_bad == 0:  # pragma: no cover - the planted defect is deterministic
-        raise RuntimeError("WAP demo: the planted bad rows are missing")
-    tf.abort_staged(root, sid)
-    sid = tf.stage_append(spark, root, _wap_batch(spark, sf_dir, bad=False))
-    if (
-        tf.read(spark, root, snapshot_id=sid).filter(F.col("cents") < 0).count()
-        != 0
-    ):  # pragma: no cover
-        raise RuntimeError("WAP demo: good batch failed its audit")
-    tf.publish(root, sid)
-    return root
+    stage->audit->publish. Crash-tolerant through tf.build: leftover
+    staged snapshots from an interrupted run are aborted and the
+    workflow replays."""
+    root = _root(sf_dir, "wap_demo", "orders")
+    return tf.build(root, [
+        lambda: tf.create(spark, root, _orders_cents(spark, sf_dir)),
+        lambda: _audited_append(
+            spark, root,
+            _wap_batch(spark, sf_dir, bad=True),
+            _wap_batch(spark, sf_dir, bad=False),
+            "cents", "WAP demo",
+        ),
+    ])
 
 
 _WAP_ORACLE = """
@@ -1612,11 +1534,6 @@ def table_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
 _GDPR_VICTIMS = "doc_id % 53 = 0"
 
 
-def _gdpr_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "gdpr_demo", tables=("documents",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tblg_{key}")
-
-
 def _gdpr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     return d.select(
@@ -1632,47 +1549,28 @@ def ensure_gdpr_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (or resume building) the GDPR-lifecycle table: create the
     base corpus (3/4 of documents), WAP the arrivals (bad delivery
     aborts, clean one publishes), erase the victim set as a
-    deletion-vector commit. Crash-tolerant: staged leftovers abort,
-    unmarked residue gc's, remaining steps replay from current_id."""
-    root = _gdpr_root(sf_dir)
-    if tf.current_id(root) >= 3:
-        return root
-    for sid in tf.staged_snapshots(root):
-        tf.abort_staged(root, sid)
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    docs = _gdpr_docs(spark, sf_dir)
-    if tf.current_id(root) == 0:
-        tf.create(spark, root, docs.filter(F.col("doc_id") % 4 != 0))
-    if tf.current_id(root) == 1:
-        arrivals = docs.filter(F.col("doc_id") % 4 == 0)
-        bad = arrivals.withColumn(
+    deletion-vector commit. Crash-tolerant through tf.build: staged
+    leftovers abort, unmarked residue gc's, remaining steps replay
+    from current_id."""
+    root = _root(sf_dir, "gdpr_demo", "documents")
+
+    def arrivals() -> None:
+        good = _gdpr_docs(spark, sf_dir).filter(F.col("doc_id") % 4 == 0)
+        bad = good.withColumn(
             "n_tok",
             F.when(F.col("doc_id") % 20 == 0, F.lit(-1))
             .otherwise(F.col("n_tok"))
             .cast("long"),
         )
-        sid = tf.stage_append(spark, root, bad)
-        n_bad = (
-            tf.read(spark, root, snapshot_id=sid)
-            .filter(F.col("n_tok") < 0)
-            .count()
-        )
-        if n_bad == 0:  # pragma: no cover - planted defect is deterministic
-            raise RuntimeError("GDPR demo: planted bad delivery is missing")
-        tf.abort_staged(root, sid)
-        sid = tf.stage_append(spark, root, arrivals)
-        if (
-            tf.read(spark, root, snapshot_id=sid)
-            .filter(F.col("n_tok") < 0)
-            .count()
-            != 0
-        ):  # pragma: no cover
-            raise RuntimeError("GDPR demo: clean delivery failed its audit")
-        tf.publish(root, sid)
-    if tf.current_id(root) == 2:
-        tf.delete_where(spark, root, _GDPR_VICTIMS)
-    return root
+        _audited_append(spark, root, bad, good, "n_tok", "GDPR demo")
+
+    return tf.build(root, [
+        lambda: tf.create(
+            spark, root, _gdpr_docs(spark, sf_dir).filter(F.col("doc_id") % 4 != 0)
+        ),
+        arrivals,
+        lambda: tf.delete_where(spark, root, _GDPR_VICTIMS),
+    ])
 
 
 _GDPR_ORACLE = f"""
@@ -1752,48 +1650,25 @@ def pipeline_gdpr_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _mor_root(sf_dir: str) -> str:
-    key = corpus_key(sf_dir, "mor_demo", tables=("orders",))
-    return os.path.join(tempfile.gettempdir(), f"pypiper_tblm_{key}")
-
-
 def ensure_mor_table(spark: SparkSession, sf_dir: str) -> str:
     """Build (or resume building) the three-snapshot merge-on-read
-    demo table. Idempotent and crash-tolerant (gc + replay from
-    current_id, the ensure_demo_table discipline)."""
-    root = _mor_root(sf_dir)
-    if tf.current_id(root) >= 3:
-        return root
-    if os.path.isdir(root) and tf.uncommitted_manifests(root):
-        tf.gc_orphans(root)
-    o = load_table(spark, sf_dir, "orders")
-    base = o.select(
-        "o_orderkey",
-        "o_orderstatus",
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    )
-    if tf.current_id(root) == 0:
-        tf.create(spark, root, base)
-    if tf.current_id(root) == 1:
-        updates = base.filter(F.col("o_orderkey") % 3 == 0).select(
-            "o_orderkey",
-            "o_orderstatus",
-            (F.col("cents") + 1000).alias("cents"),
-        )
-        inserts = o.filter(F.col("o_orderkey") % 1000 == 0).select(
-            (F.col("o_orderkey") + 2000000000).alias("o_orderkey"),
-            F.lit("N").alias("o_orderstatus"),
-            F.lit(5000).cast("long").alias("cents"),
-        )
-        tf.merge_on_read(
-            spark, root, updates.unionByName(inserts), key="o_orderkey"
-        )
-    if tf.current_id(root) == 2:
-        wave2 = base.filter(F.col("o_orderkey") % 7 == 0).select(
-            "o_orderkey", F.lit("M").alias("o_orderstatus"), "cents"
-        )
+    demo table. Idempotent and crash-tolerant through tf.build (gc +
+    replay from current_id)."""
+    root = _root(sf_dir, "mor_demo", "orders")
+
+    def restatus() -> None:
+        wave2 = _orders_cents(spark, sf_dir).filter(
+            F.col("o_orderkey") % 7 == 0
+        ).select("o_orderkey", F.lit("M").alias("o_orderstatus"), "cents")
         tf.merge_on_read(spark, root, wave2, key="o_orderkey")
-    return root
+
+    return tf.build(root, [
+        lambda: tf.create(spark, root, _orders_cents(spark, sf_dir)),
+        lambda: tf.merge_on_read(
+            spark, root, _changes(spark, sf_dir), key="o_orderkey"
+        ),
+        restatus,
+    ])
 
 
 _MOR_ORACLE = """

@@ -15,6 +15,7 @@ import os
 import tempfile
 import uuid
 from collections.abc import Callable, Iterable
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -210,6 +211,23 @@ def _stage_slices(df: DataFrame, stage: str, n: int, pred, project=None) -> None
 # verify state-store instance counts without re-running streams.
 # Reading the property after the drain costs nothing per run.
 LAST_PROGRESS: dict[str, list] = {}
+
+
+def _commit_retrying(commit: Callable[[], object], what: str) -> None:
+    """Run ``commit`` until it wins the commit race: on CommitConflict
+    (another writer advanced CURRENT first) back off and retry on the
+    new snapshot, at most 20 attempts."""
+    import time
+
+    from pypiper_spark import tableformat as tf
+
+    for attempt in range(20):
+        try:
+            commit()
+            return
+        except tf.CommitConflict:
+            time.sleep(0.02 * (attempt + 1))
+    raise RuntimeError(f"{what}: conflict retries exhausted")
 
 
 def _await_or_raise(q, timeout_sec: int = 300) -> None:
@@ -899,9 +917,8 @@ def run_stream_corpus_build(spark: SparkSession, sf_dir: str, root: str) -> None
     the driver. In production the staging step doesn't exist at all:
     data already arrives as files/streams; this harness only
     manufactures a deterministic arrival order the oracle can replay.
+    A finished table (all batches committed) returns at once.
     """
-    import shutil
-
     from pypiper_spark import tableformat as tf
     from pypiper_spark.catalog import load_table
     from pypiper_spark.queries.snapshots import (
@@ -911,35 +928,18 @@ def run_stream_corpus_build(spark: SparkSession, sf_dir: str, root: str) -> None
         _spipe_enrich,
     )
 
+    if tf.current_id(root) >= _SPIPE_BATCHES:
+        return
     apply_runtime_confs(spark)
     key = _staging_key(sf_dir, "documents")  # r12: fingerprint-keyed staging
     stage = os.path.join(tempfile.gettempdir(), f"pypiper_spc2_src_{key}")
-    names = [f"batch{k}.parquet" for k in range(_SPIPE_BATCHES)]
-    if not (
-        os.path.isdir(stage) and sorted(os.listdir(stage)) == sorted(names)
-    ):  # exact-set staging check (ADVICE r12; see _stage_slices)
-        if os.path.isdir(stage):
-            shutil.rmtree(stage)
-        os.makedirs(stage, exist_ok=True)
-        docs = load_table(spark, sf_dir, "documents").select(
+    _stage_slices(
+        load_table(spark, sf_dir, "documents").select(
             "doc_id", "lang", "source", "text"
-        )
-        base = 1_000_000_000
-        for k in range(_SPIPE_BATCHES):
-            scratch = os.path.join(stage, f".tmp{k}")
-            (
-                docs.filter(_spipe_batch_col() == k)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(scratch)
-            )
-            part = next(
-                f for f in sorted(os.listdir(scratch)) if f.endswith(".parquet")
-            )
-            path = os.path.join(stage, names[k])
-            os.replace(os.path.join(scratch, part), path)
-            shutil.rmtree(scratch, ignore_errors=True)
-            os.utime(path, (base + 60 * k, base + 60 * k))
+        ),
+        stage, _SPIPE_BATCHES,
+        lambda k: _spipe_batch_col() == k,
+    )
 
     schema = T.StructType(
         [
@@ -1010,8 +1010,6 @@ def run_concurrent_ingest_streams(spark: SparkSession, sf_dir: str) -> DataFrame
     exact oracle checks. Loser-retry data files are orphans by
     protocol; gc_orphans sweeps them before the final read."""
     import shutil
-    import threading
-    import time as _time
 
     from pypiper_spark import tableformat as tf
     from pypiper_spark.catalog import load_table
@@ -1037,48 +1035,26 @@ def run_concurrent_ingest_streams(spark: SparkSession, sf_dir: str) -> DataFrame
     tf.create(spark, root, spark.createDataFrame([], schema))
 
     stages = {}
-    base = 1_000_000_000
     for app, slices in (("writerA", (0, 1)), ("writerB", (2, 3))):
         stage = os.path.join(
             tempfile.gettempdir(), f"pypiper_cci_src_{key}_{app}"
         )
-        names = [f"batch{i}.parquet" for i in range(len(slices))]
-        if not all(os.path.exists(os.path.join(stage, n)) for n in names):
-            if os.path.isdir(stage):
-                shutil.rmtree(stage)
-            os.makedirs(stage, exist_ok=True)
-            for i, k in enumerate(slices):
-                scratch = os.path.join(stage, f".tmp{i}")
-                (
-                    ev.filter(F.col("event_id") % 4 == k)
-                    .coalesce(1)
-                    .write.mode("overwrite")
-                    .parquet(scratch)
-                )
-                part = next(
-                    f for f in sorted(os.listdir(scratch))
-                    if f.endswith(".parquet")
-                )
-                path = os.path.join(stage, names[i])
-                os.replace(os.path.join(scratch, part), path)
-                shutil.rmtree(scratch, ignore_errors=True)
-                os.utime(path, (base + 60 * i, base + 60 * i))
+        _stage_slices(
+            ev, stage, len(slices),
+            lambda i: F.col("event_id") % 4 == slices[i],
+        )
         stages[app] = stage
 
     def make_sink(app: str):
         def ingest(batch_df: DataFrame, batch_id: int) -> None:
             if tf.last_txn_version(root, app) >= batch_id:
                 return  # replayed after a commit the checkpoint missed
-            for attempt in range(20):
-                try:
-                    tf.append(
-                        batch_df.sparkSession, root, batch_df,
-                        txn=(app, batch_id),
-                    )
-                    return
-                except tf.CommitConflict:
-                    _time.sleep(0.02 * (attempt + 1))
-            raise RuntimeError(f"{app} batch {batch_id}: conflict retries exhausted")
+            _commit_retrying(
+                lambda: tf.append(
+                    batch_df.sparkSession, root, batch_df, txn=(app, batch_id)
+                ),
+                f"{app} batch {batch_id}",
+            )
 
         return ingest
 
@@ -1149,7 +1125,6 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the hash checks ordering, replacement, and the vector's
     cumulative algebra at once."""
     import shutil
-    import time as _time
 
     from pypiper_spark import tableformat as tf
     from pypiper_spark.catalog import load_table
@@ -1180,8 +1155,12 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         tf.create(spark, build, base)
         try:
             os.rename(build, pristine)
-        except OSError:  # lost a build race: keep the winner's table
+        except OSError:
             shutil.rmtree(build, ignore_errors=True)
+            # only a lost build race (the winner's table is complete) is
+            # fine; anything else at the path must not be cloned
+            if not os.path.exists(os.path.join(pristine, "CURRENT")):
+                raise
     root = os.path.join(
         tempfile.gettempdir(), f"pypiper_cdcu_tbl_{key}_{uuid.uuid4().hex[:8]}"
     )
@@ -1195,61 +1174,54 @@ def run_cdc_upsert_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     stage = os.path.join(tempfile.gettempdir(), f"pypiper_cdcu_src_{key}")
-    names = [f"batch{b}.parquet" for b in range(3)]
-    if not (
-        os.path.isdir(stage) and sorted(os.listdir(stage)) == sorted(names)
-    ):  # exact-set staging check (ADVICE r12; see _stage_slices)
-        if os.path.isdir(stage):
-            shutil.rmtree(stage)
-        os.makedirs(stage, exist_ok=True)
-        mtime0 = 1_000_000_000
-        for b in range(3):
-            wave = base.filter(F.col("o_orderkey") % 5 == b + 1).select(
+    # all three batches as one frame tagged by `batch`; each staged
+    # slice filters its batch (Catalyst prunes the other union
+    # branches) and projects the tag away
+    changes = []
+    for b in range(3):
+        batch = F.lit(b).alias("batch")
+        changes.append(
+            base.filter(F.col("o_orderkey") % 5 == b + 1).select(
                 "o_orderkey",
                 "o_orderstatus",
                 (F.col("cents") + 1000 * (b + 1)).alias("cents"),
+                batch,
             )
-            overlap = base.filter(F.col("o_orderkey") % 100 == 0).select(
+        )
+        changes.append(
+            base.filter(F.col("o_orderkey") % 100 == 0).select(
                 "o_orderkey",
                 F.lit("U").alias("o_orderstatus"),
                 F.lit(777 * (b + 1)).cast("long").alias("cents"),
+                batch,
             )
-            batch = wave.unionByName(overlap)
-            if b == 1:
-                inserts = o.filter(F.col("o_orderkey") % 1000 == 0).select(
-                    (F.col("o_orderkey") + 3000000000).alias("o_orderkey"),
-                    F.lit("I").alias("o_orderstatus"),
-                    F.lit(999).cast("long").alias("cents"),
-                )
-                batch = batch.unionByName(inserts)
-            scratch = os.path.join(stage, f".tmp{b}")
-            batch.coalesce(1).write.mode("overwrite").parquet(scratch)
-            part = next(
-                f for f in sorted(os.listdir(scratch)) if f.endswith(".parquet")
-            )
-            path = os.path.join(stage, names[b])
-            os.replace(os.path.join(scratch, part), path)
-            shutil.rmtree(scratch, ignore_errors=True)
-            os.utime(path, (mtime0 + 60 * b, mtime0 + 60 * b))
+        )
+    changes.append(
+        o.filter(F.col("o_orderkey") % 1000 == 0).select(
+            (F.col("o_orderkey") + 3000000000).alias("o_orderkey"),
+            F.lit("I").alias("o_orderstatus"),
+            F.lit(999).cast("long").alias("cents"),
+            F.lit(1).alias("batch"),
+        )
+    )
+    _stage_slices(
+        reduce(DataFrame.unionByName, changes),
+        stage, 3, lambda k: F.col("batch") == k,
+        project=["o_orderkey", "o_orderstatus", "cents"],
+    )
 
     app = "cdc_upsert"
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         if tf.last_txn_version(root, app) >= batch_id:
             return  # replayed after a commit the checkpoint missed
-        for attempt in range(20):
-            try:
-                tf.merge_on_read(
-                    batch_df.sparkSession,
-                    root,
-                    batch_df,
-                    key="o_orderkey",
-                    txn=(app, batch_id),
-                )
-                return
-            except tf.CommitConflict:
-                _time.sleep(0.02 * (attempt + 1))
-        raise RuntimeError(f"batch {batch_id}: conflict retries exhausted")
+        _commit_retrying(
+            lambda: tf.merge_on_read(
+                batch_df.sparkSession, root, batch_df,
+                key="o_orderkey", txn=(app, batch_id),
+            ),
+            f"{app} batch {batch_id}",
+        )
 
     with _stream_scope(spark, sf_dir, table="orders"):
         q = (

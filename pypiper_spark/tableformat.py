@@ -147,6 +147,13 @@ operations a table format earns its keep with at 100 TB:
   (same as Delta's transaction retention): ``expire_snapshots``
   drops old manifests, so a writer idle past the retention window
   loses its watermark — size retention to writer cadence.
+
+- **resumable builds** (``build``): a table defined as a list of
+  steps, one commit each, builds once and resumes after a crash — a
+  finished table costs one CURRENT read; an interrupted one has its
+  staged leftovers aborted and its crash residue gc'd, then replays
+  only the missing steps. Every demo table in queries/snapshots.py is
+  such a step list.
 """
 
 from __future__ import annotations
@@ -1222,6 +1229,34 @@ def gc_orphans(root: str, min_age_sec: float = 0.0) -> list[str]:
             os.remove(p)
             removed.append(f"snapshots/snap-{n:08d}.json")
     return removed
+
+
+def build(root: str, steps) -> str:
+    """Build, or resume building, the table at ``root`` from ``steps``:
+    zero-argument callables where ``steps[k]`` commits exactly snapshot
+    k + 1. A finished table costs one CURRENT read and runs no step.
+    Otherwise the leftovers of an interrupted build are cleared first
+    (staged snapshots aborted, crash residue gc'd — either would hold
+    the next commit id) and only ``steps[current_id(root):]`` run, so a
+    crash mid-build replays the missing commits and nothing else. Steps
+    build their own inputs, so a finished table builds none. Returns
+    ``root``; raises if a step does not advance CURRENT by exactly
+    one."""
+    cur = current_id(root)
+    if cur >= len(steps):
+        return root
+    for sid in staged_snapshots(root):
+        abort_staged(root, sid)
+    if uncommitted_manifests(root):
+        gc_orphans(root)
+    for k in range(cur, len(steps)):
+        steps[k]()
+        got = current_id(root)
+        if got != k + 1:
+            raise RuntimeError(
+                f"build step {k + 1} of {root} left CURRENT at {got}"
+            )
+    return root
 
 
 def compact(spark: SparkSession, root: str, target_files: int = 1) -> int:

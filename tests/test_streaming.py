@@ -315,3 +315,49 @@ def test_stage_slices_rebuilds_on_extra_stale_file(spark, tmp_path):
     assert sorted(os.listdir(stage)) == ["batch0.parquet", "batch1.parquet"]
     got = sorted(r.event_id for r in spark.read.parquet(stage).collect())
     assert got == list(range(100))
+
+
+def test_concurrent_ingest_rebuilds_a_stale_extra_slice(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The concurrent-ingest writers stage through _stage_slices'
+    exact-set check: a stale extra file in a writer's staging dir is
+    rebuilt away, not replayed as a third batch (which would stamp a
+    txn version past the writer's two batches)."""
+    import glob
+    import shutil
+    import tempfile
+
+    from pypiper_spark.streaming.twins import run_concurrent_ingest_streams
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    first = sorted(run_concurrent_ingest_streams(spark, sf_dir).collect())
+    (stage,) = glob.glob(str(tmp_path / "pypiper_cci_src_*_writerA"))
+    shutil.copy(
+        os.path.join(stage, "batch0.parquet"),
+        os.path.join(stage, "batch2.parquet"),
+    )
+    assert sorted(run_concurrent_ingest_streams(spark, sf_dir).collect()) == first
+
+
+def test_cdc_pristine_path_without_current_raises(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A failed publish of the CDC pristine base table counts as a lost
+    build race only when the winner's table is complete (CURRENT
+    exists). A non-empty directory without CURRENT at the pristine
+    path raises before any clone, staging or stream."""
+    import glob
+    import tempfile
+
+    from pypiper_spark.streaming import twins
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    key = twins._staging_key(sf_dir, "orders")
+    stray = tmp_path / f"pypiper_cdcu_base_{key}" / "data"
+    stray.mkdir(parents=True)
+    (stray / "part.parquet").write_bytes(b"")
+    with pytest.raises(OSError):
+        twins.run_cdc_upsert_stream(spark, sf_dir)
+    left = sorted(os.path.basename(p) for p in glob.glob(str(tmp_path / "*")))
+    assert left == [f"pypiper_cdcu_base_{key}"], left

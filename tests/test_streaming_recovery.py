@@ -160,7 +160,7 @@ def test_stream_corpus_crash_between_write_and_swap_recovers(
     from pypiper_spark.queries import snapshots as S
 
     crashed = str(tmp_path / "crashed_root")
-    monkeypatch.setattr(S, "_spipe_root", lambda _sf: crashed)
+    monkeypatch.setattr(S, "_root", lambda *_: crashed)
 
     real_swap = tf._swap_current
 
@@ -183,7 +183,7 @@ def test_stream_corpus_crash_between_write_and_swap_recovers(
     assert tf.current_id(crashed) == 4
 
     clean = str(tmp_path / "clean_root")
-    monkeypatch.setattr(S, "_spipe_root", lambda _sf: clean)
+    monkeypatch.setattr(S, "_root", lambda *_: clean)
     S.ensure_stream_corpus_table(spark, sf_dir)
     assert _spipe_rollup(spark, crashed) == _spipe_rollup(spark, clean)
 
@@ -265,7 +265,8 @@ def test_stream_corpus_dedup_scan_prunes_text(spark, sf_dir):
     out = _spipe_classify(_spipe_enrich(batch), tf.read(spark, root))
     plan = out._jdf.queryExecution().executedPlan().toString()
     corpus_scans = [
-        l for l in plan.splitlines() if "ReadSchema" in l and "pypiper_spc" in l
+        l for l in plan.splitlines()
+        if "ReadSchema" in l and os.path.basename(root) in l
     ]
     assert corpus_scans, plan[:2000]
     assert all("text" not in l.split("ReadSchema")[1] for l in corpus_scans), (

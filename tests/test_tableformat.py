@@ -98,6 +98,84 @@ def test_crash_between_write_and_swap_recovers(spark, small_df, tmp_path):
     assert tf.read(spark, root).count() == 120
 
 
+def _counted_steps(spark, root, fail_first_call_of: int):
+    """Three tf.build steps over spark.range frames (ids 0-29, ten per
+    snapshot) with a per-step call count; step ``fail_first_call_of``
+    raises on its first call, before it commits."""
+    calls = [0, 0, 0]
+
+    def step(k):
+        def run():
+            calls[k] += 1
+            if k == fail_first_call_of and calls[k] == 1:
+                raise RuntimeError("injected step failure")
+            df = spark.range(10 * k, 10 * k + 10)
+            (tf.create if k == 0 else tf.append)(spark, root, df)
+
+        return run
+
+    return [step(k) for k in range(3)], calls
+
+
+def test_build_resumes_with_the_remaining_steps(spark, tmp_path):
+    """tf.build: a step that raises leaves the table at the previous
+    snapshot; the next build aborts a staged snapshot left above
+    CURRENT (it would hold the next commit id), then runs only the
+    remaining steps; a finished table runs no step."""
+    root = str(tmp_path / "t")
+    steps, calls = _counted_steps(spark, root, fail_first_call_of=1)
+    with pytest.raises(RuntimeError, match="injected step failure"):
+        tf.build(root, steps)
+    assert tf.current_id(root) == 1 and calls == [1, 1, 0]
+    staged = tf.stage_append(spark, root, spark.range(100, 110))
+    assert tf.staged_snapshots(root) == [staged] == [2]
+    assert tf.build(root, steps) == root
+    assert calls == [1, 2, 1]
+    assert tf.current_id(root) == 3 and tf.staged_snapshots(root) == []
+    assert tf.orphan_files(root) == []
+    got = sorted(r.id for r in tf.read(spark, root).collect())
+    assert got == list(range(30))
+    assert [m["operation"] for m in tf.snapshots(root)] == [
+        "create", "append", "append"
+    ]
+    assert tf.build(root, steps) == root
+    assert calls == [1, 2, 1]
+
+
+def test_build_clears_crash_residue_before_the_replay(
+    spark, tmp_path, monkeypatch
+):
+    """A step that dies between its manifest write and the pointer
+    swap leaves an uncommitted manifest that blocks its snapshot id;
+    the next build gc's it and replays that step alone."""
+    root = str(tmp_path / "t")
+    steps, calls = _counted_steps(spark, root, fail_first_call_of=-1)
+    real_swap = tf._swap_current
+
+    def crash_at_2(r, snap_id):
+        if snap_id == 2:
+            raise RuntimeError("injected crash between write and swap")
+        real_swap(r, snap_id)
+
+    monkeypatch.setattr(tf, "_swap_current", crash_at_2)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        tf.build(root, steps)
+    assert tf.current_id(root) == 1 and tf.uncommitted_manifests(root) == [2]
+    monkeypatch.setattr(tf, "_swap_current", real_swap)
+    tf.build(root, steps)
+    assert calls == [1, 2, 1]
+    assert tf.current_id(root) == 3 and tf.orphan_files(root) == []
+    got = sorted(r.id for r in tf.read(spark, root).collect())
+    assert got == list(range(30))
+
+
+def test_build_rejects_a_step_that_does_not_commit(spark, tmp_path):
+    root = str(tmp_path / "t")
+    steps = [lambda: tf.create(spark, root, spark.range(3)), lambda: None]
+    with pytest.raises(RuntimeError, match="build step 2 .* left CURRENT at 1"):
+        tf.build(root, steps)
+
+
 def test_concurrent_commit_conflict(spark, small_df, tmp_path):
     """Two writers race from the same parent: the second commit (same
     snapshot id) must raise CommitConflict, and the winner's data must

@@ -49,11 +49,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 _ALLOWED = {"bigint", "int", "integer", "smallint", "string", "date", "boolean"}
 _QUANTIZE = {"double", "float"}
 _EPOCH = {"timestamp", "timestamp_ntz"}
@@ -216,10 +211,9 @@ def main() -> int:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
 
-    import duckdb
-
     from pyspark.sql import functions as F
 
+    from bench import duck_connect
     from pypiper_spark.registry import all_queries, resolve_oracle
     from pypiper_spark.session import get_spark
 
@@ -231,13 +225,7 @@ def main() -> int:
         not poison the NEXT query's allocation (r7 lesson: after one
         genuine OOM, even trivial set-op twins reported spurious
         bad-allocation failures on the shared connection)."""
-        c = duckdb.connect()
-        c.sql(f"SET threads TO {os.environ.get('SPARK_GRAFT_CPUS', '32')}")
-        for t in TABLES:
-            c.sql(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-            )
-        return c
+        return duck_connect(sf_dir)
 
     results: dict[str, dict] = {}
     n_match = n_mismatch = n_skipped = 0
